@@ -1,32 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // AQE sizes post-shuffle partitions by data volume instead of core
-      // count (production guidance for busy clusters; at toy SF it
-      // collapses ~KB shuffles to one task instead of 32), and cached
-      // plans are allowed to re-partition so persisted pipeline stages
-      // get the same treatment.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv()
     // Warm up the JVM/codegen/parquet-footer paths once so the first timed
     // query doesn't absorb session startup costs. A failed warm-up must not
     // kill the run — per-query failures degrade to -1 sentinels below.
     try {
-      spark.read.parquet(s"$sfDir/lineitem.parquet")
-        .groupBy("l_returnflag").count()
-        .write.format("noop").mode("overwrite").save()
+      SparkEntry.noop(spark.read.parquet(s"$sfDir/lineitem.parquet")
+        .groupBy("l_returnflag").count())
     } catch { case e: Throwable => System.err.println(s"[bench] warmup failed: $e") }
     // Pre-fit the session-lifetime model fixtures (BPE full-corpus +
     // train-split tokenizers, PCA) HERE so their one-time fit cost lands
@@ -54,8 +36,6 @@ object Bench {
       graft.pipeline.PcaFixture.fitted(emb, sfDir, 8)
     } catch { case e: Throwable => System.err.println(s"[bench] fixture warmup failed: $e") }
     val fixtureSec = (System.nanoTime() - tFix0) / 1e9
-    // noop sink forces full evaluation of every column (count() would let
-    // Catalyst prune unused projections, under-measuring the query).
     // optional trailing args: bench only these queries (local iteration)
     val only = args.toSet
     // Each query runs REPS times and reports the per-query MIN: single-run
@@ -98,21 +78,9 @@ object Bench {
       .filter { case (name, _) => only.isEmpty || only(name) }
       .map { case (name, fn) =>
       val times = (1 to repsOf(name)).map { _ =>
-        val t0 = System.nanoTime()
-        val ok =
-          try {
-            CacheScope.scoped {
-              fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-            true
-          }
-          catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e"); false }
-        val t = (System.nanoTime() - t0) / 1e9
-        // isolate queries: per-query persists otherwise accumulate across
-        // ~90 queries in one JVM, and the eventual full GC lands on an
-        // arbitrary later query (observed as random 5-10x per-query spikes)
-        try spark.catalog.clearCache() catch { case _: Throwable => () }
         // -1 marks a failed query so consumers can't mistake it for a timing
-        if (ok) t else -1.0
+        SparkEntry.runQuery(spark, "bench", name, fn(spark, sfDir))(SparkEntry.noop)
+          .getOrElse(-1.0)
       }
       name -> (if (times.exists(_ < 0)) -1.0 else times.min)
     }

@@ -10,8 +10,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * built-in functions can't express the operator efficiently).
   *
   * Activate with `.config("spark.sql.extensions", "graft.GraftExtensions")`
-  * on the session builder (done by graft.Verify, graft.Bench and the test
-  * session); call via `functions.call_function("shingle_min_hash", col)`
+  * on the session builder (done by [[GraftSession]] for every main and the
+  * test session); call via `functions.call_function("shingle_min_hash", col)`
   * or SQL. Queries outside this registry never require the extension —
   * every operator keeps a portable Column-DSL formulation.
   */

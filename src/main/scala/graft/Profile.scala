@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Per-query optimization profiler (spark_optimization_guide §1: measure
   * first). For each named query (all when none given) runs the plan twice
@@ -25,20 +24,25 @@ import org.apache.spark.sql.SparkSession
   * Usage: SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 runMain graft.Profile [query…]
   */
 object Profile {
+
+  /** Seconds of `[t0, t1]` covered by none of `spans` — the driver-side
+    * gaps. Spans may overlap, nest or reach outside the window; only
+    * their union's intersection with the window counts as covered. */
+  def uncovered(t0: Long, t1: Long, spans: Seq[(Long, Long)]): Double = {
+    val ss = spans.map { case (a, b) => (a max t0, b min t1) }
+      .filter(x => x._2 > x._1).sortBy(_._1)
+    var covered = 0L; var curA = t0; var curB = t0
+    ss.foreach { case (a, b) =>
+      if (a > curB) { covered += curB - curA; curA = a; curB = b }
+      else if (b > curB) curB = b
+    }
+    covered += curB - curA
+    ((t1 - t0) - covered) / 1e9
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv()
 
     // job/task accounting listener; reset per measured run
     val lock = new Object
@@ -82,70 +86,58 @@ object Profile {
         }
       }
     })
+    def drain(): Unit =
+      org.apache.spark.GraftListenerBridge.waitUntilEmpty(spark.sparkContext)
     def reset(): Unit = lock.synchronized {
-      // (caller drains the bus first — see drain())
       jobs = 0; taskNs = 0L; shufBytes = 0L; firstSubmitNs = 0L
       spans = Nil; jobStartNs = Map.empty; siteOf = Map.empty; siteAgg = Map.empty
     }
-    // wall not covered by any job span = driver-side gaps
-    def uncovered(t0: Long, t1: Long): Double = lock.synchronized {
-      val ss = spans.map { case (a, b) => (a max t0, b min t1) }
-        .filter(x => x._2 > x._1).sortBy(_._1)
-      var covered = 0L; var curA = 0L; var curB = 0L
-      ss.foreach { case (a, b) =>
-        if (a > curB) { covered += curB - curA; curA = a; curB = b }
-        else if (b > curB) curB = b
-      }
-      covered += curB - curA
-      ((t1 - t0) - covered) / 1e9
-    }
+    // epoch-based clock: listener events carry epoch-ms stamps, so the
+    // run window must share their base (1 ms granularity is plenty for
+    // multi-second walls)
+    def epochNs(): Long = System.currentTimeMillis() * 1000000L
     val only = args.toSet
     val explain = sys.env.get("SPARK_GRAFT_EXPLAIN_DIR")
     SparkEntry.queries
       .filter { case (n, _) => only.isEmpty || only(n) }
       .toSeq.sortBy(_._1)
       .foreach { case (name, fn) =>
-        try {
-          // warmup run
-          CacheScope.scoped {
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-          spark.catalog.clearCache()
+        def run(sink: org.apache.spark.sql.DataFrame => Unit) =
+          SparkEntry.runQuery(spark, "profile", name, fn(spark, sfDir))(sink)
+        var t0 = 0L
+        var t1 = 0L
+        val measured = run(SparkEntry.noop).flatMap { _ =>
           explain.foreach { dir =>
             new java.io.File(dir).mkdirs()
-            val txt = CacheScope.scoped { fn(spark, sfDir).queryExecution.explainString(
-              org.apache.spark.sql.execution.FormattedMode) }
-            java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/$name.txt"),
-              txt.getBytes("UTF-8"))
-            spark.catalog.clearCache()
+            run { df =>
+              java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/$name.txt"),
+                df.queryExecution.explainString(
+                  org.apache.spark.sql.execution.FormattedMode).getBytes("UTF-8"))
+            }
           }
           // drain the async listener bus so late WARMUP events can't
-          // contaminate the measured run's counters, then again after
-          // the run so every measured event has been delivered
-          org.apache.spark.GraftListenerBridge.waitUntilEmpty(spark.sparkContext)
+          // contaminate the measured run's counters
+          drain()
           reset()
-          // epoch-based clock: listener events carry epoch-ms stamps,
-          // so the run window must share their base (1 ms granularity
-          // is plenty for multi-second walls)
-          val t0 = System.currentTimeMillis() * 1000000L
-          CacheScope.scoped {
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-          org.apache.spark.GraftListenerBridge.waitUntilEmpty(spark.sparkContext)
-          val t1 = System.currentTimeMillis() * 1000000L
-          spark.catalog.clearCache()
-          val wall = (t1 - t0) / 1e9
-          val plan = lock.synchronized {
-            if (firstSubmitNs == 0L) wall else (firstSubmitNs - t0) / 1e9 }
-          val gap = uncovered(t0, t1)
-          println(f"""{"q":"$name","wall_s":$wall%.2f,"plan_s":$plan%.2f,"jobs":$jobs,"task_s":${taskNs / 1e9}%.2f,"gap_s":$gap%.2f,"shuf_mb":${shufBytes / 1048576.0}%.1f}""")
-          if (sys.env.get("SPARK_GRAFT_JOBS").contains("1"))
-            lock.synchronized {
+          t0 = epochNs()
+          run { df => SparkEntry.noop(df); t1 = epochNs() }
+        }
+        // t1 is stamped when the save returns; draining afterwards only
+        // makes sure every measured event has reached the counters
+        drain()
+        measured match {
+          case Left(e) =>
+            println(s"""{"q":"$name","error":"${e.getClass.getSimpleName}"}""")
+          case Right(_) => lock.synchronized {
+            val wall = (t1 - t0) / 1e9
+            val plan = if (firstSubmitNs == 0L) wall else (firstSubmitNs - t0) / 1e9
+            val gap = uncovered(t0, t1, spans)
+            println(f"""{"q":"$name","wall_s":$wall%.2f,"plan_s":$plan%.2f,"jobs":$jobs,"task_s":${taskNs / 1e9}%.2f,"gap_s":$gap%.2f,"shuf_mb":${shufBytes / 1048576.0}%.1f}""")
+            if (sys.env.get("SPARK_GRAFT_JOBS").contains("1"))
               siteAgg.toSeq.sortBy(-_._2._2).take(20).foreach { case (s, (c, t)) =>
                 println(f"  [jobs] $c%4d  ${t}%7.2fs  $s")
               }
-            }
-        } catch { case e: Throwable =>
-          println(s"""{"q":"$name","error":"${e.getClass.getSimpleName}"}""")
-          System.err.println(s"[profile] $name failed: $e")
+          }
         }
       }
     spark.stop()

@@ -43,4 +43,31 @@ object SparkEntry {
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     modules.flatMap(_.oracles).toMap
+
+  /** The sink that forces full evaluation of every column (`count()`
+    * would let Catalyst prune unused projections). */
+  def noop(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** The per-query isolation policy every main runs its queries under.
+    * `query` is built inside its own [[CacheScope.scoped]] block and
+    * handed to `sink`; a failure of any kind is reported on stderr as
+    * `[tag] name failed: …` and returned, never thrown, so the caller's
+    * loop keeps going. Afterwards `clearCache()` releases anything
+    * persisted outside the scope: per-query persists would otherwise
+    * accumulate in one JVM, and the eventual full GC lands on an
+    * arbitrary later query. Returns the seconds from the builder call
+    * through scope end; the `clearCache()` is outside that region. */
+  def runQuery(spark: SparkSession, tag: String, name: String, query: => DataFrame)(
+      sink: DataFrame => Unit): Either[Throwable, Double] = {
+    val t0 = System.nanoTime()
+    val outcome =
+      try { CacheScope.scoped(sink(query)); Right((System.nanoTime() - t0) / 1e9) }
+      catch { case e: Throwable =>
+        System.err.println(s"[$tag] $name failed: $e")
+        Left(e)
+      }
+    try spark.catalog.clearCache() catch { case _: Throwable => () }
+    outcome
+  }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,39 +7,15 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional trailing args: run only these queries (local iteration)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // AQE sizes post-shuffle partitions by data volume instead of core
-      // count (production guidance for busy clusters; at toy SF it
-      // collapses ~KB shuffles to one task instead of 32), and cached
-      // plans are allowed to re-partition so persisted pipeline stages
-      // get the same treatment.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
-      // the scope releases every builder-internal persist right after the
-      // query's terminal action; clearCache stays as the backstop for
-      // anything persisted outside CacheScope
-      try CacheScope.scoped {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
+        SparkEntry.runQuery(spark, "verify", name, fn(spark, sfDir)) {
+          _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        }
       }
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      try spark.catalog.clearCache() catch { case _: Throwable => () }
-    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -1,6 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import scala.util.control.NonFatal
 
 /** EXECUTABLE plan-hygiene gate: runs every query at a given SF with a
   * log4j2 appender attached to the root logger and FAILS (exit 1) if any
@@ -13,11 +11,10 @@ import scala.util.control.NonFatal
   * it with the non-foldable `col % 1` partition key (no warning) or add
   * itself here with a justification comment.
   *
-  * Session config mirrors [[Bench]]/[[Verify]] — in particular the
-  * GraftExtensions registration, without which the native-expression
-  * queries (shingle_min_hash) fail to resolve and the probe would die
-  * mid-alphabet. Run: `sbt "runMain graft.WarnProbe"` (optionally with
-  * query names as args); exit 0 = surface clean. */
+  * The session is [[GraftSession]]'s, the one [[Bench]] times, and each
+  * query runs under [[SparkEntry.runQuery]]'s isolation policy. Run:
+  * `sbt "runMain graft.WarnProbe"` (optionally with query names as args);
+  * exit 0 = surface clean. */
 object WarnProbe {
 
   /** Queries allowed to plan a global window, each with a reason. Empty:
@@ -55,13 +52,7 @@ object WarnProbe {
   def main(args: Array[String]): Unit = {
     val hits = attachProbe()
 
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv()
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val only = args.toSet
     val failed = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
@@ -70,16 +61,9 @@ object WarnProbe {
       .filter(q => only.isEmpty || only(q._1)).foreach { case (name, fn) =>
         System.err.println(s"===QUERY $name")
         hits.clear()
-        try {
-          CacheScope.scoped {
-            val df = fn(spark, sf)
-            if (sys.env.contains("SPARK_GRAFT_EXPLAIN")) df.explain("formatted")
-            df.write.format("noop").mode("overwrite").save()
-          }
-        } catch { case NonFatal(e) =>
-          failed += ((name, Option(e.getMessage).getOrElse(e.getClass.getName)))
-        }
-        try spark.catalog.clearCache() catch { case NonFatal(_) => () }
+        SparkEntry.runQuery(spark, "warnprobe", name, fn(spark, sf))(SparkEntry.noop)
+          .left.foreach(e =>
+            failed += ((name, Option(e.getMessage).getOrElse(e.getClass.getName))))
         if (!hits.isEmpty && !Whitelist(name)) warned += name
       }
     spark.stop()

@@ -1279,8 +1279,8 @@ object StreamingJobs {
     // "mapGroups is not supported with streaming DataFrames"), so the
     // GroupState[Boolean] slot below is the minimal Spark-supported
     // spelling; it is never read or updated, and its state store stays
-    // at zero rows for the life of the query (StreamProbe pins the
-    // [0, …] fates-store row count).
+    // at zero rows for the life of the query (RefreshStreamSpec pins
+    // the fates-store row count at 0).
     probes.groupByKey(p => (p.doc_id, p.op)).flatMapGroupsWithState(
       OutputMode.Append, GroupStateTimeout.NoTimeout) {
       (key: (Long, String), it: Iterator[RefreshProbe],

@@ -12,7 +12,6 @@ package graft
 class CacheScopeSpec extends SparkSpec {
 
   test("scoped queries release every builder-internal cache") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val sf = "/root/testdata/sf0.001"
     // the cache-heaviest non-CC queries: savgol's base, exp-mean's dense
     // grid, twoMeans' window base, the LSH dedup, the survivor index,

@@ -75,8 +75,6 @@ class PlanSpec extends SparkSpec {
     "ann_serve_pick_roundtrip" -> "the RETURNED plan is the cached picked-mode serve; when the pick is a full-scan compressed mode (sq8/matryoshka — the bytes-cheapest eligible on this fixture) it crossJoins the <= 10-row broadcast query set, the ann_sq8_recall shape; the diagnostic with its whitelisted brute leg runs during the driver-side persist, not in the returned plan")
 
   test("no query plan contains an unbounded cartesian or accidental nested-loop join") {
-    // events.parquet carries TIMESTAMP(NANOS); same conf graft.Verify sets
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val sf = "/root/testdata/sf0.001"
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val plan =
@@ -115,7 +113,6 @@ class PlanSpec extends SparkSpec {
   private val allowedGlobalWindow: Map[String, String] = Map.empty
 
   test("no query plans an unpartitioned window over an unbounded relation") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
     val sf = "/root/testdata/sf0.001"
     val hits = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
@@ -147,7 +144,6 @@ class PlanSpec extends SparkSpec {
     // representative top-k surfaces (a conf/threshold regression or a
     // rank-expression rewrite that breaks the pattern fails here, not
     // at 100 TB).
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val sf = "/root/testdata/sf0.001"
     val expectGroupLimit = Seq("text_topk_per_source", "text_tfidf_terms",
       "sample_cluster_balanced")
@@ -166,7 +162,6 @@ class PlanSpec extends SparkSpec {
     // supplied, cellBits needs no count() action, so the only job is the
     // caller's terminal action. A regression re-introducing a per-call
     // count() (or any other eager action) fails this guard.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -201,7 +196,6 @@ class PlanSpec extends SparkSpec {
   }
 
   test("events_mad_outliers medians never sort a full group through one window") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // The scale-safe median is histogram + refine: every window in the
     // plan must operate on the bin relation or the median-bin-joined
     // subset (both carry the __bin column). A regression back to

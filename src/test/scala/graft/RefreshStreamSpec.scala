@@ -73,6 +73,37 @@ class RefreshStreamSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("state rows track the live corpus: fates stay 0, a changed-text rewrite " +
+    "keeps docs and bands, deleting half the docs halves them") {
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val in = MemoryStream[(Long, Long, String, String, Seq[Float])]
+    val q = StreamingJobs.refreshStream(in.toDS(), mkCents)
+      .writeStream.format("noop").outputMode("append").start()
+    // distinct gate-passing texts per (doc, version): 24 words, 2
+    // stopwords, every content word 5 chars
+    def text(doc: Long, v: Int) =
+      ("the" +: "of" +: (0 until 22).map(i => f"q$doc%02d$v" + Integer.toString(i, 36)))
+        .mkString(" ")
+    val n = 8L
+    // (fates, docs, bands) state rows after the batch; progress lists
+    // the operators sink-first: fates, bands, docs
+    def send(events: Seq[(Long, Long, String, String, Seq[Float])]): (Long, Long, Long) = {
+      in.addData(events); q.processAllAvailable()
+      val Seq(fates, bands, docs) = q.lastProgress.stateOperators.map(_.numRowsTotal).toSeq
+      (fates, docs, bands)
+    }
+    try {
+      // one doc-store row per live doc, one band-store row per band key
+      // (4 bands per doc, no shared bands between distinct texts)
+      assert(send((0L until n).map(d => (d, 10L + d, "upsert", text(d, 1), e1))) === ((0L, 8L, 32L)))
+      // every doc re-upserted with changed text: stream length doubles,
+      // state does not move (stale bands evicted, new ones added)
+      assert(send((0L until n).map(d => (d, 100L + d, "upsert", text(d, 2), e1))) === ((0L, 8L, 32L)))
+      assert(send((0L until n / 2).map(d => (d, 200L + d, "delete", text(d, 2), e1))) === ((0L, 4L, 16L)))
+    } finally q.stop()
+  }
+
   test("re-upsert with CHANGED text evicts the stale membership (no ghosts)") {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

@@ -16,7 +16,6 @@ class ScanPruningSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   private def scans(name: String): Seq[FileSourceScanExec] = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // AQE wraps joined plans in AdaptiveSparkPlanExec whose inner tree
     // collect() can't see before execution; pushdown/pruning decisions
     // are made below AQE, so inspecting the non-adaptive plan is exact.
