@@ -134,16 +134,21 @@ object ArEnsemble {
   private val decSumT = DecimalType(25, 4)
   private val decProdT = DecimalType(38, 8)
 
-  private def momentAggs(v: Column, y1: Column, y2: Column) = Seq(
-    count(lit(1)).as("n3"),
-    sum(dec15(v)).cast(decSumT).as("sy"),
-    sum(dec15(y1)).cast(decSumT).as("s1"),
-    sum(dec15(y2)).cast(decSumT).as("s2"),
-    sum(dec15(y1) * dec15(y1)).cast(decProdT).as("s11"),
-    sum(dec15(y2) * dec15(y2)).cast(decProdT).as("s22"),
-    sum(dec15(y1) * dec15(y2)).cast(decProdT).as("s12"),
-    sum(dec15(y1) * dec15(v)).cast(decProdT).as("s1y"),
-    sum(dec15(y2) * dec15(v)).cast(decProdT).as("s2y"))
+  /** The nine exact moments of the (y2, y1, y) rows, or of those among
+    * them where `rows` holds. */
+  private def momentAggs(v: Column, y1: Column, y2: Column, rows: Option[Column] = None) = {
+    def over(c: Column) = rows.fold(c)(when(_, c))
+    Seq(
+      count(over(lit(1))).as("n3"),
+      sum(over(dec15(v))).cast(decSumT).as("sy"),
+      sum(over(dec15(y1))).cast(decSumT).as("s1"),
+      sum(over(dec15(y2))).cast(decSumT).as("s2"),
+      sum(over(dec15(y1) * dec15(y1))).cast(decProdT).as("s11"),
+      sum(over(dec15(y2) * dec15(y2))).cast(decProdT).as("s22"),
+      sum(over(dec15(y1) * dec15(y2))).cast(decProdT).as("s12"),
+      sum(over(dec15(y1) * dec15(v))).cast(decProdT).as("s1y"),
+      sum(over(dec15(y2) * dec15(v))).cast(decProdT).as("s2y"))
+  }
 
   /** M1 incremental state — the closed-form analog of the reference's
     * per-model ArimaModelWrapper bookkeeping (reference
@@ -210,60 +215,52 @@ object ArEnsemble {
     * grid extend the moments additively; the rest only advance the global
     * position counter (they may become grid points of later batches).
     *
-    * NOTE for callers: `state` is referenced three times below (base
-    * aggregate, lag context, final join) — pass it materialized (a
-    * parquet read, or `.persist()` at the call site) or its upstream
-    * plan re-executes 3×. Persisting HERE would leak one cache entry
-    * per optimize-loop tick, so ownership stays with the caller. */
+    * One pass: each new observation (k-th by ts) meets every state row,
+    * and sits at global position n_tot + k − 1, on model m's grid when
+    * that is ≡ anchor (mod m). Per model, the aligned points in order take
+    * their lags from the state's last two grid values (yl1, yl2) and then
+    * from each other; one aggregate sums the moments of the complete
+    * (y2, y1, y) rows and picks the new last two values and last ts.
+    *
+    * NOTE for callers: `state` is referenced twice below (the alignment
+    * and the final join) — pass it materialized (a parquet read, or
+    * `.persist()` at the call site) or its upstream plan re-executes.
+    * Persisting HERE would leak one cache entry per optimize-loop tick, so
+    * ownership stays with the caller. */
   def updateState(state: DataFrame, newObs: DataFrame, models: Int = 20): DataFrame = {
-    val base = state.agg(max(col("n_tot")).as("n0"), max(col("anchor")).as("anc"))
     val nNew = newObs.agg(count(lit(1)).as("n_new"), max(col("ts")).as("mx_new"))
-    val posedNew = newObs
+    val grid = state.filter(col("model_id") <= models).select(col("model_id"),
+      col("n_tot"), col("anchor"), col("yl1").as("c1"), col("yl2").as("c2"))
+    val wS = Window.partitionBy(col("model_id")).orderBy(col("k"))
+    val aligned = newObs
       .withColumn("k", row_number().over(Window.partitionBy(col("ts") % 1).orderBy("ts")))
-      .crossJoin(broadcast(base))
-      .select(col("ts"), col("value"), (col("n0") + col("k") - 1).as("pos"), col("anc"))
-    val aligned = posedNew
-      .select(col("ts"), col("value"), col("pos"), col("anc"),
-        explode(sequence(lit(1), lit(models))).as("model_id"))
-      .filter((col("pos") - col("anc")) % col("model_id") === 0)
-      .withColumn("sk", row_number().over(
-        Window.partitionBy(col("model_id")).orderBy(col("pos"))).cast("long"))
-      .select(col("model_id"), col("sk"), col("value"), col("pos"), col("ts"))
-    // the state's last two grid values, as pseudo-rows providing the lag
-    // context beneath the first aligned new points
-    val ctx = state.select(col("model_id"), explode(array(
-        struct(lit(-2L).as("sk"), col("yl2").as("value")),
-        struct(lit(-1L).as("sk"), col("yl1").as("value")))).as("c"))
-      .select(col("model_id"), col("c.sk").as("sk"), col("c.value").as("value"),
-        lit(null).cast("long").as("pos"), lit(null).cast("long").as("ts"))
-    val wS = Window.partitionBy(col("model_id")).orderBy(col("sk"))
-    val ext = ctx.unionByName(aligned)
-      .withColumn("y1", lag(col("value"), 1).over(wS))
-      .withColumn("y2", lag(col("value"), 2).over(wS))
-      .withColumn("rend", row_number().over(
-        Window.partitionBy(col("model_id")).orderBy(col("sk").desc)))
+      .crossJoin(broadcast(grid))
+      .filter((col("n_tot") + col("k") - 1 - col("anchor")) % col("model_id") === 0)
+      .withColumn("sk", row_number().over(wS))
+      .withColumn("y1", when(col("sk") === 1, col("c1"))
+        .otherwise(lag(col("value"), 1).over(wS)))
+      .withColumn("y2", when(col("sk") === 1, col("c2")).when(col("sk") === 2, col("c1"))
+        .otherwise(lag(col("value"), 2).over(wS)))
     // complete (y2,y1,y) rows only — same rule as fitState's
     // y2.isNotNull filter: a model fitted from <2 grid points carries a
     // null lag context, and its first new rows must not count into n3
     // while contributing nothing to the (null-skipping) moment sums
-    val deltas = ext.filter(col("sk") >= 1 && col("y2").isNotNull)
-      .groupBy(col("model_id"))
-      .agg(momentAggs(col("value"), col("y1"), col("y2")).head,
-        momentAggs(col("value"), col("y1"), col("y2")).tail: _*)
-      .select(col("model_id") +: (Seq("n3", "sy", "s1", "s2",
-        "s11", "s22", "s12", "s1y", "s2y").map(c => col(c).as(s"d_$c"))): _*)
-    // latest-grid bookkeeping from the UNFILTERED tail (rend ≤ 2): an
-    // incomplete first row still advances the grid (ctx rows' null ts
-    // never wins the max)
-    val newLast = ext.filter(col("rend") <= 2)
-      .groupBy(col("model_id")).agg(
-        max(when(col("rend") === 1, col("value"))).as("nyl1"),
-        max(when(col("rend") === 2, col("value"))).as("nyl2"),
-        max(col("ts")).as("d_last_ts"))
+    val moments = momentAggs(col("value"), col("y1"), col("y2"), Some(col("y2").isNotNull))
+    val deltas = aligned.groupBy(col("model_id"))
+      .agg(moments.head, moments.tail ++ Seq(
+        // the latest grid values from the unfiltered tail: an incomplete
+        // first row still advances the grid
+        max_by(col("value"), col("sk")).as("nyl1"),
+        max_by(col("y1"), col("sk")).as("nyl2"),
+        max(col("ts")).as("d_last_ts")): _*)
+      .select(col("model_id") +: col("nyl1") +: col("nyl2") +: col("d_last_ts") +:
+        Seq("n3", "sy", "s1", "s2", "s11", "s22", "s12", "s1y", "s2y")
+          .map(c => col(c).as(s"d_$c")): _*)
     def addDec(name: String, t: DecimalType) =
       (col(name) + coalesce(col(s"d_$name"), lit(0).cast(t))).cast(t).as(name)
-    state.join(deltas, Seq("model_id"), "left")
-      .join(newLast, Seq("model_id"), "left")
+    // deltas has at most `models` rows: broadcast it, as the planner
+    // cannot bound it from statistics
+    state.join(broadcast(deltas), Seq("model_id"), "left")
       .crossJoin(broadcast(nNew))
       .select(col("model_id"),
         (col("n3") + coalesce(col("d_n3"), lit(0L))).as("n3"),
@@ -302,19 +299,22 @@ object ArEnsemble {
   /** A17+A10 — blend a wide per-model forecast frame (model_id, f1..fH)
     * across the model axis with the null-skipping EWM fold (span 5,
     * adjust=False — reference wm.py:133): one (step, blend) row per
-    * forecast step. Shared by the a17 query and the REST façade. */
+    * forecast step. Shared by the a17 query and the REST façade.
+    *
+    * The fold is ONE `aggregate` over the model-ordered member array
+    * (the [[forecastArray]] trick) instead of a `models`-deep chain of
+    * `withColumn` levels: each step is [[graft.metrics.SmoothOps.ewmLevelSql]]'s
+    * CASE arithmetic in the same order, and a null seed makes level 1 the
+    * first member, so the result is bit-equal to the chain. */
   def blendForecast(wide: DataFrame, models: Int, horizon: Int): DataFrame = {
     val long = wide.select(col("model_id"),
       posexplode(array((1 to horizon).map(k => col(s"f$k")): _*)))
       .select(col("model_id"), (col("pos") + 1).as("step"), col("col").as("f"))
-    var piv = long.groupBy(col("step")).agg(
-      (1 to models).map(k =>
-        max(when(col("model_id") === k, col("f"))).as(s"x$k")).head,
-      (1 to models).drop(1).map(k =>
-        max(when(col("model_id") === k, col("f"))).as(s"x$k")): _*)
-    piv = piv.withColumn("acc1", col("x1"))
-    (2 to models).foreach(k =>
-      piv = piv.withColumn(s"acc$k", expr(graft.metrics.SmoothOps.ewmLevelSql(k))))
-    piv.select(col("step"), round(col(s"acc$models") + lit(1e-9), 4).as("blend"))
+    val members = long.groupBy(col("step")).agg(array((1 to models).map(k =>
+      max(when(col("model_id") === k, col("f")))): _*).as("xs"))
+    val blend = aggregate(col("xs"), lit(null).cast("double"), (acc, x) =>
+      when(x.isNull, acc).when(acc.isNull, x)
+        .otherwise(acc * (lit(2e0) / lit(3e0)) + x * (lit(1e0) / lit(3e0))))
+    members.select(col("step"), round(blend + lit(1e-9), 4).as("blend"))
   }
 }

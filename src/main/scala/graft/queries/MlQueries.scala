@@ -84,7 +84,7 @@ object MlQueries extends QueryModule {
         .withColumn("cut", col("n") - 1 - expr("(n - 1) div 6")))
       val init = posed.filter(col("pos") <= col("cut")).select("ts", "value")
       val tail = posed.filter(col("pos") > col("cut")).select("ts", "value")
-      // updateState reads its state 3x: materialize the O(models)-row fit
+      // updateState reads its state twice: materialize the O(models)-row fit
       val st = graft.CacheScope.persist(ArEnsemble.fitState(init, MODELS))
       ArEnsemble.forecastFromState(ArEnsemble.updateState(st, tail, MODELS), HOR_UPD)
     }),

@@ -1,11 +1,14 @@
 package graft.streaming
 
+import java.util.concurrent.{ExecutionException, FutureTask}
 import graft.metrics.MetricOps
 import graft.models.{ArEnsemble, CandidateOps}
 import graft.sources.ProfilesStore
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 /** The reference's resident 60 s / 600 s optimization loop
@@ -25,34 +28,109 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   */
 object OptimizeLoop {
 
-  /** One evaluation over the accumulated metric history (long format:
-    * sid ∈ {latency, throughput, conslag, backpressure}, ts, value). */
-  def evaluateTick(history: DataFrame, step: Long,
-                   avgWindowPoints: Int, currentScaleOut: Long,
-                   candidateBest: Long): (Double, Double, Boolean, Long, Boolean) = {
-    def series(name: String) = history.filter(col("sid") === name).drop("sid")
-    val trail = MetricOps.trailingAvg(history, step, avgWindowPoints)
-      .collect().map(r => r.getString(0) -> r.getDouble(2)).toMap
-    val avgLat = trail.getOrElse("latency", Double.NaN)
-    val avgThr = trail.getOrElse("throughput", Double.NaN)
-    val bck = MetricOps.backpressureRule(
-      series("latency"), series("conslag"), series("backpressure")).head
-    // slopes are null while a series has <2 points (undefined fit):
-    // treat as not-backpressured / flat rather than NPE-ing the stream
-    val isBck = !bck.isNullAt(3) && bck.getBoolean(3)
-    // M13's slope input is the WORKLOAD (throughput) forecast slope (the
-    // m13 query's semantics — M11 over the workload series), not the
-    // latency slope the backpressure rule computes
-    val wlRow = MetricOps.forecastSlope(
-      series("throughput").withColumn("sid", lit("throughput"))).head(1)
-    val slopePositive = wlRow.nonEmpty && !wlRow.head.isNullAt(2) &&
-      wlRow.head.getDouble(2) > 0
+  /** What one tick reads off the stored history (long format: sid ∈
+    * {latency, throughput, conslag, backpressure}, ts, value):
+    *  - `avg`: A3's trailing-window average per series
+    *    ([[MetricOps.trailingAvg]]);
+    *  - `bckPresPer`, `latencySlope`, `conslagSlope`: M10's inputs, the
+    *    share of positive backpressure points and the rounded M7 slopes
+    *    ([[MetricOps.backpressureRule]]); None where the batch function
+    *    reads null;
+    *  - `workloadSlope`: M13's input, the M11 throughput slope
+    *    ([[MetricOps.forecastSlope]]);
+    *  - `tickTs`: the max ts of the history; `throughputMaxTs`: the max
+    *    throughput ts, the forecaster's cursor. */
+  private[graft] final case class TickStats(
+      avg: Map[String, Double], bckPresPer: Option[Double],
+      latencySlope: Option[Double], conslagSlope: Option[Double],
+      workloadSlope: Option[Double], tickTs: Option[Long], throughputMaxTs: Option[Long]) {
+    /** M10: per == 1, or 0 < per with both slopes above 1; a null input
+      * reads as not backpressured. */
+    def isBckPres: Boolean = bckPresPer.contains(1.0) ||
+      (bckPresPer.exists(_ > 0.0) && latencySlope.exists(_ > 1.0) &&
+        conslagSlope.exists(_ > 1.0))
+  }
+
+  /** [[TickStats]] from one plan and one collect. A per-sid window gives
+    * each series' max ts and its min/max ts over non-null values; one
+    * conditional aggregate per sid then sums A3's trailing window, M10's
+    * share, and the exact OLS sums of the series' one fit: M7 over the
+    * whole of latency and conslag, M11 over the second half of
+    * throughput. The sums are [[MetricOps.fitStats]]'s decimal and long
+    * aggregates, taken with x = ts − (the series' min ts); the fit's own x
+    * origin, its min ts, is moved onto them afterwards in exact arithmetic
+    * (a no-op for M7), so every slope is bit-equal to the batch
+    * functions'. */
+  private[graft] def tickStats(history: DataFrame, step: Long, avgWindowPoints: Int): TickStats = {
+    val w = Window.partitionBy(col("sid"))
+    val valued = col("value").isNotNull
+    val ranged = history.select(col("sid"), col("ts"), col("value"))
+      .withColumn("t_max", max(col("ts")).over(w))
+      .withColumn("v_min", min(when(valued, col("ts"))).over(w))
+      .withColumn("v_max", max(when(valued, col("ts"))).over(w))
+    val inTrail = col("ts") >= col("t_max") - lit(avgWindowPoints.toLong * step)
+    val fitted = valued && (col("sid").isin("latency", "conslag") ||
+      (col("sid") === "throughput" && col("ts") >= (col("v_min") + col("v_max")) / 2))
+    val x = col("ts") - col("v_min")
+    val y = col("value").cast(DecimalType(18, 4))
+    val perSid = ranged.groupBy(col("sid")).agg(
+      max(col("t_max")).as("t_max"),
+      round(sum(when(inTrail, col("value").cast(DecimalType(30, 6)))).cast("double") /
+        count(when(inTrail, col("value"))) + lit(1e-9), 4).as("avg"),
+      (sum(when(col("value") > 0, 1).otherwise(0)).cast("double") / count(lit(1))).as("per"),
+      (min(when(fitted, col("ts"))) - min(col("v_min"))).as("d"),
+      count(when(fitted, col("value"))).as("n"),
+      sum(when(fitted, x)).as("sx0"),
+      sum(when(fitted, y)).as("sy"),
+      sum(when(fitted, x.cast(DecimalType(18, 0)) * y)).as("sxy0"),
+      sum(when(fitted, (x * x).cast(DecimalType(38, 0)))).as("sxx0"))
+    // x' = x − d over the fit's n points
+    val d = col("d").cast(DecimalType(38, 0))
+    val n = col("n").cast(DecimalType(38, 0))
+    val fit = perSid.select(col("sid"), col("t_max"), col("avg"), col("per"), col("n"),
+      (col("sx0") - col("n") * col("d")).cast("double").as("sx"),
+      col("sy").cast("double").as("sy"),
+      (col("sxy0") - d * col("sy")).cast("double").as("sxy"),
+      (col("sxx0") - lit(2) * d * col("sx0").cast(DecimalType(38, 0)) + n * d * d)
+        .cast("double").as("sxx"))
+    val rows = MetricOps.withLine(fit)
+      .select(col("sid"), col("t_max"), col("avg"), col("per"),
+        round(col("slope") + lit(1e-9), 6).as("slope"))
+      .collect()
+    val bySid = rows.map(r => r.getString(0) -> r).toMap
+    def opt(sid: String, i: Int): Option[Double] =
+      bySid.get(sid).filterNot(_.isNullAt(i)).map(_.getDouble(i))
+    TickStats(
+      avg = rows.filterNot(_.isNullAt(2)).map(r => r.getString(0) -> r.getDouble(2)).toMap,
+      bckPresPer = opt("backpressure", 3),
+      latencySlope = opt("latency", 4),
+      conslagSlope = opt("conslag", 4),
+      workloadSlope = opt("throughput", 4),
+      tickTs = rows.filterNot(_.isNullAt(1)).map(_.getLong(1)).maxOption,
+      throughputMaxTs = bySid.get("throughput").filterNot(_.isNullAt(1)).map(_.getLong(1)))
+  }
+
+  /** M13 (the m13 query's semantics): the candidate is taken when the
+    * current scale-out is backpressured; the slope is the WORKLOAD
+    * (throughput) forecast slope, not the latency slope M10 reads. */
+  private def decide(s: TickStats, currentScaleOut: Long,
+                     candidateBest: Long): (Double, Double, Boolean, Long, Boolean) = {
     val (best, rescale) = CandidateOps.rescaleDecision(
       bestRec = candidateBest, bestLat = candidateBest, isBestCandidate = None,
-      slope = if (slopePositive) 1.0 else -1.0,
-      currentSo = currentScaleOut, currentValid = !isBck)
-    (avgLat, avgThr, isBck, best, rescale)
+      slope = if (s.workloadSlope.exists(_ > 0)) 1.0 else -1.0,
+      currentSo = currentScaleOut, currentValid = !s.isBckPres)
+    (s.avg.getOrElse("latency", Double.NaN), s.avg.getOrElse("throughput", Double.NaN),
+      s.isBckPres, best, rescale)
   }
+
+  /** One evaluation over the accumulated metric history: trailing
+    * averages (A3), the backpressure rule (M10 over M7 slopes) and the
+    * rescale decision (M13). Slopes are null while a series has < 2
+    * points (undefined fit), which reads as not backpressured / flat. */
+  def evaluateTick(history: DataFrame, step: Long,
+                   avgWindowPoints: Int, currentScaleOut: Long,
+                   candidateBest: Long): (Double, Double, Boolean, Long, Boolean) =
+    decide(tickStats(history, step, avgWindowPoints), currentScaleOut, candidateBest)
 
   /** M1 forecaster tick (reference analytics/app/workload/models.py:166-183
     * `predict()`: update each model with the new observations, persist the
@@ -60,7 +138,12 @@ object OptimizeLoop {
     * state under `stateDir` — first tick fits, later ticks `update()` with
     * only `newObs` — and returns the per-model forecast frame. The state
     * swap is write-next → delete → rename (a parquet table can't be
-    * overwritten while being read). */
+    * overwritten while being read).
+    *
+    * The state is `models` tiny rows and a tick brings few observations,
+    * so the update runs in one partition (its windows and joins then need
+    * no shuffle) and is collected once: the write and the forecast both
+    * read the collected rows, so the stored state is read once. */
   def forecastTick(spark: SparkSession, stateDir: String, newObs: DataFrame,
                    models: Int = 20, horizon: Int = 20): DataFrame = {
     val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
@@ -71,24 +154,38 @@ object OptimizeLoop {
     // silently refitting from one batch and discarding all prior moments
     if (!fs.exists(cur) && fs.exists(nxt) &&
         require2(fs.rename(nxt, cur), s"promote $nxt")) ()
-    // an empty (or missing-yet-empty) state must NEVER be written: a
-    // fitState over zero observations would persist an empty frame, and
-    // every later updateState over it stays empty — the store would be
-    // permanently bricked while the cursor advances past real data. An
-    // empty first tick simply waits for observations.
-    val haveState = fs.exists(cur) &&
-      spark.read.parquet(cur.toString).head(1).nonEmpty
-    if (!haveState && newObs.head(1).isEmpty)
-      return ArEnsemble.forecastFromState(
-        ArEnsemble.fitState(newObs, models).limit(0), horizon)
-    val st =
-      if (haveState)
-        ArEnsemble.updateState(spark.read.parquet(cur.toString), newObs, models)
+    val next =
+      if (fs.exists(cur))
+        ArEnsemble.updateState(spark.read.parquet(cur.toString).coalesce(1),
+          newObs.coalesce(1), models)
       else ArEnsemble.fitState(newObs, models)
-    st.write.mode("overwrite").parquet(nxt.toString)
-    fs.delete(cur, true)
-    require2(fs.rename(nxt, cur), s"swap $nxt -> $cur")
-    ArEnsemble.forecastFromState(spark.read.parquet(cur.toString), horizon)
+    val rows = next.collect()
+    val st = spark.createDataFrame(java.util.Arrays.asList(rows: _*), next.schema)
+      .coalesce(1)
+    // an empty state must NEVER be written: a fitState over zero
+    // observations would persist an empty frame, and every later
+    // updateState over it stays empty — the store would be permanently
+    // bricked while the cursor advances past real data. A stored state is
+    // therefore never empty, and an empty first tick simply waits for
+    // observations.
+    if (rows.nonEmpty) {
+      st.write.mode("overwrite").parquet(nxt.toString)
+      fs.delete(cur, true)
+      require2(fs.rename(nxt, cur), s"swap $nxt -> $cur")
+    }
+    ArEnsemble.forecastFromState(st, horizon)
+  }
+
+  /** Starts `body` on a thread of its own and returns a function that
+    * waits for its result (rethrowing its failure). A new thread inherits
+    * the caller's Spark local properties, so its jobs belong to the
+    * stream's job group and stopping the stream cancels them. */
+  private def alongside[T](body: => T): () => T = {
+    val task = new FutureTask[T](() => body)
+    val thread = new Thread(task, "optimize-loop-evaluation")
+    thread.setDaemon(true)
+    thread.start()
+    () => try task.get() catch { case e: ExecutionException => throw e.getCause }
   }
 
   private def require2(ok: Boolean, what: String): Boolean = {
@@ -143,14 +240,15 @@ object OptimizeLoop {
         ProfilesStore.append(batch, storePath)
         if ((id + 1) % evalEveryBatches == 0) {
           val spark = batch.sparkSession
-          val hist = ProfilesStore.read(spark, storePath)
-          val (lat, thr, bck, best, resc) = evaluateTick(
-            hist, step, avgWindowPoints, currentScaleOut, candidateBest)
+          // the store holds what the stream appends: read it with the
+          // batch's schema instead of inferring one from a footer (a job)
+          val hist = spark.read.schema(batch.schema).parquet(storePath)
+          // the evaluation only reads, and the forecaster needs none of
+          // it: it runs alongside the forecaster
+          val evaluation = alongside(tickStats(hist, step, avgWindowPoints))
           val fNext: Option[Double] = forecastDir.map { fd =>
             val newThr = hist.filter(col("sid") === "throughput" &&
               col("ts") > lastSeenTs).select("ts", "value")
-            val mx = newThr.agg(max("ts")).head
-            if (!mx.isNullAt(0)) lastSeenTs = math.max(lastSeenTs, mx.getLong(0))
             // the stored value is the BLENDED next-step forecast (EWM
             // span-5 over the ensemble — A10/A17, the value the reference's
             // prediction row records), not a plain model mean
@@ -159,13 +257,14 @@ object OptimizeLoop {
             if (bRow.isEmpty || bRow.head.isNullAt(1)) Double.NaN
             else bRow.head.getDouble(1)
           }
+          val stats = evaluation()
+          stats.throughputMaxTs.foreach(mx => lastSeenTs = math.max(lastSeenTs, mx))
+          val (lat, thr, bck, best, resc) = decide(stats, currentScaleOut, candidateBest)
           import spark.implicits._
           // first tick may evaluate an empty history (e.g. an empty
           // initial micro-batch): there is nothing to decide on — skip the
           // decision row instead of NPE-ing the streaming query
-          val tickRow = hist.agg(max("ts")).head
-          if (!tickRow.isNullAt(0)) {
-            val tickTs = tickRow.getLong(0)
+          stats.tickTs.foreach { tickTs =>
             ProfilesStore.append(
               Seq((id, tickTs, lat, thr, bck, best, resc, fNext))
                 .toDF("batch_id", "ts", "avg_lat", "avg_thr", "is_bck_pres",
