@@ -160,21 +160,39 @@ object VectorOps {
       .agg(sum(col("x") * col("r")).as("p"))
   }
 
-  /** Brute-force exact cosine top-k: for each query vector (`vec_id` in
-    * `queryIds`), the `k` nearest others. The query side is broadcast; the
-    * corpus streams through once. */
+  /** The fixed-query-set brute scan every exact baseline shares: each
+    * row of `e` paired with each query (`vec_id < queryMaxId`, projected
+    * to `q_id` plus `queryCols`) other than itself and passing
+    * `pairFilter`. The query side is broadcast; the corpus streams
+    * through once. */
+  private def bruteScan(e: DataFrame, queryMaxId: Long, queryCols: Seq[Column],
+                        pairFilter: Column = lit(true)): DataFrame = {
+    val qs = e.filter(col("vec_id") < queryMaxId)
+      .select(col("vec_id").as("q_id") +: queryCols: _*)
+    e.crossJoin(broadcast(qs))
+      .filter(col("vec_id") =!= col("q_id") && pairFilter)
+  }
+
+  /** Per-query top-k: each `q_id`'s rows ranked by `score`, ties to the
+    * lowest `vec_id` (the order every ANN oracle replays), first `k`
+    * kept. The `rk <= k` filter sits directly on the `row_number`
+    * column, the shape Spark's InferWindowGroupLimit turns into a
+    * map-side group limit. Use as `.transform(topK(col("c").desc, k))`. */
+  private def topK(score: Column, k: Int)(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    df.withColumn("rk", row_number().over(
+        Window.partitionBy(col("q_id")).orderBy(score, col("vec_id"))))
+      .filter(col("rk") <= k)
+  }
+
+  /** Brute-force exact cosine top-k: for each query vector (`vec_id <
+    * queryMaxId`), the `k` nearest others ([[bruteScan]]). */
   def bruteForceTopK(emb: DataFrame, queryMaxId: Long, k: Int): DataFrame = {
     val e = emb.select(col("vec_id"), quant.as("q"))
       .withColumn("n2", dot(col("q"), col("q")))
-    val qs = e.filter(col("vec_id") < queryMaxId)
-      .select(col("vec_id").as("q_id"), col("q").as("qq"), col("n2").as("qn2"))
-    import org.apache.spark.sql.expressions.Window
-    e.crossJoin(broadcast(qs))
-      .filter(col("vec_id") =!= col("q_id"))
+    bruteScan(e, queryMaxId, Seq(col("q").as("qq"), col("n2").as("qn2")))
       .withColumn("c", cosinePre(col("qq"), col("q"), col("qn2"), col("n2")))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("c").desc, col("vec_id"))))
-      .filter(col("rk") <= k)
+      .transform(topK(col("c").desc, k))
       .select(col("q_id"), col("vec_id"), round(col("c") + lit(1e-9), 6).as("cosine"), col("rk"))
   }
 
@@ -201,15 +219,9 @@ object VectorOps {
     require(prefixDim >= 1, "prefixDim must be positive")
     val e = emb.select(col("vec_id"), slice(quant, 1, prefixDim).as("q"))
       .withColumn("n2", dot(col("q"), col("q")))
-    val qs = e.filter(col("vec_id") < queryMaxId)
-      .select(col("vec_id").as("q_id"), col("q").as("qq"), col("n2").as("qn2"))
-    import org.apache.spark.sql.expressions.Window
-    e.crossJoin(broadcast(qs))
-      .filter(col("vec_id") =!= col("q_id"))
+    bruteScan(e, queryMaxId, Seq(col("q").as("qq"), col("n2").as("qn2")))
       .withColumn("c", cosinePre(col("qq"), col("q"), col("qn2"), col("n2")))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("c").desc, col("vec_id"))))
-      .filter(col("rk") <= k)
+      .transform(topK(col("c").desc, k))
       .select(col("q_id"), col("vec_id"), col("c"), col("rk"))
   }
 
@@ -268,15 +280,9 @@ object VectorOps {
       .agg(transform(array_sort(collect_list(struct(col("i"), col("xd")))),
         s => s.getField("xd")).as("dq"))
     val e = coded.withColumn("n2", dot(col("dq"), col("dq")))
-    val qs = e.filter(col("vec_id") < queryMaxId)
-      .select(col("vec_id").as("q_id"), col("dq").as("qq"), col("n2").as("qn2"))
-    import org.apache.spark.sql.expressions.Window
-    e.crossJoin(broadcast(qs))
-      .filter(col("vec_id") =!= col("q_id"))
+    bruteScan(e, queryMaxId, Seq(col("dq").as("qq"), col("n2").as("qn2")))
       .withColumn("c", cosinePre(col("qq"), col("dq"), col("qn2"), col("n2")))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("c").desc, col("vec_id"))))
-      .filter(col("rk") <= k)
+      .transform(topK(col("c").desc, k))
       .select(col("q_id"), col("vec_id"), col("c"), col("rk"))
   }
 
@@ -390,18 +396,14 @@ object VectorOps {
       .join(ex.select(col("vec_id"), col("i"), col("x").as("xv")), Seq("vec_id", "i"))
       .groupBy(col("q_id"), col("cell"), col("vec_id"))
       .agg(sum(col("xq") * col("xv")).as("dp"))
-    import org.apache.spark.sql.expressions.Window
-    val out = dots
+    dots
       .join(norms.select(col("vec_id").as("q_id"), col("n2").as("qn2")), Seq("q_id"))
       .join(norms, Seq("vec_id"))
       .withColumn("c", col("dp").cast("double") /
         sqrt(col("qn2").cast("double") * col("n2").cast("double")))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("c").desc, col("vec_id"))))
-      .filter(col("rk") <= k)
+      .transform(topK(col("c").desc, k))
       .select(col("q_id"), col("cell"), col("vec_id"),
         round(col("c") + lit(1e-9), 6).as("cosine"), col("rk"))
-    out
   }
 
   /** Multi-probe IVF top-k: each query searches its OWN cell plus every
@@ -410,7 +412,7 @@ object VectorOps {
     * neighbors that land just across one hyperplane are recovered at the
     * cost of a bounded (b+1)× candidate fanout, still O(n · (b+1) ·
     * targetCellSize) total work, never all-pairs. Scoring is the shared
-    * per-pair fold ([[scoreCandidates]] — see its crossover note). */
+    * per-pair fold ([[serveScore]] — see its crossover note). */
   def ivfMultiprobeTopK(emb: DataFrame, k: Int, targetCellSize: Int = 50,
                         knownN: Long = -1L): DataFrame = {
     val bits = cellBits(if (knownN >= 0) knownN else emb.count(), targetCellSize)
@@ -431,49 +433,32 @@ object VectorOps {
     val cands = probes.join(cells, Seq("cell"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"))
-    scoreCandidates(emb, cands, k)
+    serveScore(emb, emb, cands, k)
   }
 
-  /** Shared tail of every probed search: exact quantized cosine over the
-    * candidate (q_id, vec_id) pairs — two equi-joins on the pair ids,
-    * then one zip_with fold per pair (the [[lshPairs]] profiling holds
-    * here too: at the multi-probe candidate volumes — hundreds of
-    * thousands of pairs — the per-pair fold beats the posexplode
-    * relational dot, whose (pairs × dim) join rows dominate; switching
-    * this path from exploded dots measured 19.1 s → 6.7 s for
-    * ann_ivf_kmeans and 7.5 s → 2.0 s for ann_ivf_multiprobe at
-    * sf0.1), then per-query top-k. */
-  private[graft] def scoreCandidates(emb: DataFrame, cands: DataFrame, k: Int): DataFrame = {
-    val e = emb.select(col("vec_id"), quant.as("q"))
-      .withColumn("n2", dot(col("q"), col("q")))
-    import org.apache.spark.sql.expressions.Window
-    cands
-      .join(e.select(col("vec_id").as("q_id"), col("q").as("qq"), col("n2").as("qn2")), Seq("q_id"))
-      .join(e, Seq("vec_id"))
-      .withColumn("c", cosinePre(col("qq"), col("q"), col("qn2"), col("n2")))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("c").desc, col("vec_id"))))
-      .filter(col("rk") <= k)
-      .select(col("q_id"), col("vec_id"),
-        round(col("c") + lit(1e-9), 6).as("cosine"), col("rk"))
-  }
-
-  /** [[scoreCandidates]] with SEPARATE query and corpus frames — the
-    * serving-path scorer: external query vectors (not corpus members)
-    * score against corpus candidates. Same cosine arithmetic, same
-    * per-query top-k window (bounded by the candidate set). */
+  /** Shared tail of every probed search and the serving-path scorer:
+    * exact quantized cosine of each candidate (q_id, vec_id) pair, the
+    * query vectors read from `queries` and the candidates from `corpus`
+    * (the same frame when the queries are corpus members), then the
+    * per-query top-k. Two equi-joins on the pair ids, then one zip_with
+    * fold per pair (the [[lshPairs]] profiling holds here too: at the
+    * multi-probe candidate volumes — hundreds of thousands of pairs —
+    * the per-pair fold beats the posexplode relational dot, whose
+    * (pairs × dim) join rows dominate; switching this path from
+    * exploded dots measured 19.1 s → 6.7 s for ann_ivf_kmeans and
+    * 7.5 s → 2.0 s for ann_ivf_multiprobe at sf0.1). */
   private[graft] def serveScore(queries: DataFrame, corpus: DataFrame,
                                 cands: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val qe = queries.select(col("vec_id").as("q_id"), quant.as("qq"))
-      .withColumn("qn2", dot(col("qq"), col("qq")))
-    val ce = corpus.select(col("vec_id"), quant.as("q"))
+    // one projection for both sides, so a persisted corpus projection of
+    // this shape (the graph search's) serves the query side as well
+    def quantized(df: DataFrame): DataFrame = df.select(col("vec_id"), quant.as("q"))
       .withColumn("n2", dot(col("q"), col("q")))
-    cands.join(qe, Seq("q_id")).join(ce, Seq("vec_id"))
+    cands
+      .join(quantized(queries)
+        .select(col("vec_id").as("q_id"), col("q").as("qq"), col("n2").as("qn2")), Seq("q_id"))
+      .join(quantized(corpus), Seq("vec_id"))
       .withColumn("c", cosinePre(col("qq"), col("q"), col("qn2"), col("n2")))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("c").desc, col("vec_id"))))
-      .filter(col("rk") <= k)
+      .transform(topK(col("c").desc, k))
       .select(col("q_id"), col("vec_id"),
         round(col("c") + lit(1e-9), 6).as("cosine"), col("rk"))
   }
@@ -658,7 +643,7 @@ object VectorOps {
     val cands = probes.join(cells, Seq("cid"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"))
-    scoreCandidates(emb, cands, k)
+    serveScore(emb, emb, cands, k)
   }
 
   /** recall@k of an approximate search vs the exact baseline: hits per
@@ -700,16 +685,11 @@ object VectorOps {
       .groupBy(col("vec_id"))
       .agg(array_sort(collect_list(struct(col("h"), col("p")))).as("hp"))
       .select(col("vec_id"), transform(col("hp"), x => x.getField("p")).as("rp"))
-    val qs = proj.filter(col("vec_id") < queryMaxId)
-      .select(col("vec_id").as("q_id"), col("rp").as("qrp"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("q_id").orderBy(col("dst"), col("vec_id"))
-    proj.join(broadcast(qs), col("vec_id") =!= col("q_id"))
+    bruteScan(proj, queryMaxId, Seq(col("rp").as("qrp")))
       .withColumn("dst", aggregate(
         zip_with(col("qrp"), col("rp"), (a, b) => (a - b) * (a - b)),
         lit(0L), _ + _))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+      .transform(topK(col("dst"), k))
       .select(col("q_id"), col("vec_id"), col("dst"), col("rk"))
   }
 
@@ -809,7 +789,7 @@ object VectorOps {
     val cands = probes.join(cells, Seq("cid"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"))
-    scoreCandidates(emb, cands, k)
+    serveScore(emb, emb, cands, k)
   }
 
   /** INCREMENTAL INDEX ADD — the production path for a growing corpus:
@@ -878,7 +858,7 @@ object VectorOps {
     val cands = probes.join(cells, Seq("cid"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"))
-    scoreCandidates(emb, cands, k)
+    serveScore(emb, emb, cands, k)
   }
 
   /** Embedding-cosine near-duplicate verdicts: candidate pairs come from
@@ -943,28 +923,28 @@ object VectorOps {
     * engine-portable. Output: (q_id, vec_id, adist, rk). */
   def pqTopK(emb: DataFrame, queryMaxId: Long, k: Int): DataFrame = {
     val cents = pqCentroids(emb)
-    val m = cents.length
+    pqCodes(emb, cents).join(adcTable(emb, queryMaxId, cents), Seq("m", "code"))
+      .filter(col("vec_id") =!= col("q_id"))
+      .groupBy(col("q_id"), col("vec_id"))
+      .agg(sum(col("d")).as("adist"))
+      .transform(topK(col("adist"), k))
+  }
+
+  /** The ADC lookup table of the query set (`vec_id < queryMaxId`):
+    * (q_id, m, code, d), the squared distance from the query's m-th
+    * subvector to codeword `code` — one frame per subspace (each carries
+    * its own codebook literal), unioned; m·k rows per query. */
+  private def adcTable(emb: DataFrame, queryMaxId: Long,
+                       cents: Array[Array[Array[Long]]]): DataFrame = {
     val sub = cents(0)(0).length
-    val codes = pqCodes(emb, cents)
     val qs = emb.filter(col("vec_id") < queryMaxId)
       .select(col("vec_id").as("q_id"), quant.as("qq"))
-    // (q_id, m, code, d): distance from the query's m-th subvector to
-    // codeword `code` — one frame per subspace (each carries its own
-    // codebook literal), unioned; m·k rows per query
-    val dtab = (0 until m).map { s =>
+    cents.indices.map { s =>
       val centsLit = typedlit(cents(s).map(_.toSeq).toSeq)
       qs.select(col("q_id"), lit(s).as("m"),
         posexplode(transform(centsLit, cv =>
           sqdist(slice(col("qq"), s * sub + 1, sub), cv))).as(Seq("code", "d")))
     }.reduce(_ unionByName _)
-    import org.apache.spark.sql.expressions.Window
-    codes.join(dtab, Seq("m", "code"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .groupBy(col("q_id"), col("vec_id"))
-      .agg(sum(col("d")).as("adist"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("adist"), col("vec_id"))))
-      .filter(col("rk") <= k)
   }
 
   /** IVF+PQ — the PRODUCTION vector-serving composition: the k-means
@@ -986,40 +966,19 @@ object VectorOps {
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"))
     val pq = pqCentroids(emb)
-    val m = pq.length
-    val sub = pq(0)(0).length
-    val codes = pqCodes(emb, pq)
-    val qs = emb.filter(col("vec_id") < queryMaxId)
-      .select(col("vec_id").as("q_id"), quant.as("qq"))
-    val dtab = (0 until m).map { s =>
-      val centsLit = typedlit(pq(s).map(_.toSeq).toSeq)
-      qs.select(col("q_id"), lit(s).as("m"),
-        posexplode(transform(centsLit, cv =>
-          sqdist(slice(col("qq"), s * sub + 1, sub), cv))).as(Seq("code", "d")))
-    }.reduce(_ unionByName _)
-    import org.apache.spark.sql.expressions.Window
-    cands.join(codes, Seq("vec_id"))
-      .join(dtab, Seq("q_id", "m", "code"))
+    cands.join(pqCodes(emb, pq), Seq("vec_id"))
+      .join(adcTable(emb, queryMaxId, pq), Seq("q_id", "m", "code"))
       .groupBy(col("q_id"), col("vec_id"))
       .agg(sum(col("d")).as("adist"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("adist"), col("vec_id"))))
-      .filter(col("rk") <= k)
+      .transform(topK(col("adist"), k))
   }
 
   /** Exact L2 top-k baseline (squared-distance order — the metric PQ
     * approximates), query side broadcast like [[bruteForceTopK]]. */
   def bruteForceL2TopK(emb: DataFrame, queryMaxId: Long, k: Int): DataFrame = {
-    val e = emb.select(col("vec_id"), quant.as("q"))
-    val qs = e.filter(col("vec_id") < queryMaxId)
-      .select(col("vec_id").as("q_id"), col("q").as("qq"))
-    import org.apache.spark.sql.expressions.Window
-    e.crossJoin(broadcast(qs))
-      .filter(col("vec_id") =!= col("q_id"))
+    bruteScan(emb.select(col("vec_id"), quant.as("q")), queryMaxId, Seq(col("q").as("qq")))
       .withColumn("d", sqdist(col("qq"), col("q")))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("d"), col("vec_id"))))
-      .filter(col("rk") <= k)
+      .transform(topK(col("d"), k))
       .select(col("q_id"), col("vec_id"), col("d"), col("rk"))
   }
 
@@ -1190,17 +1149,12 @@ object VectorOps {
                     ceil: Double = 0.95): DataFrame = {
     val e = emb.select(col("vec_id"), col("label"), quant.as("q"))
       .withColumn("n2", dot(col("q"), col("q")))
-    val qs = e.filter(col("vec_id") < queryMaxId)
-      .select(col("vec_id").as("q_id"), col("label").as("q_label"),
-        col("q").as("qq"), col("n2").as("qn2"))
-    import org.apache.spark.sql.expressions.Window
-    e.crossJoin(broadcast(qs))
-      .filter(col("vec_id") =!= col("q_id") && col("label") =!= col("q_label"))
+    bruteScan(e, queryMaxId,
+        Seq(col("label").as("q_label"), col("q").as("qq"), col("n2").as("qn2")),
+        pairFilter = col("label") =!= col("q_label"))
       .withColumn("c", cosinePre(col("qq"), col("q"), col("qn2"), col("n2")))
       .filter(col("c") < ceil)
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("c").desc, col("vec_id"))))
-      .filter(col("rk") <= k)
+      .transform(topK(col("c").desc, k))
       .select(col("q_id"), col("vec_id"),
         round(col("c") + lit(1e-9), 6).as("cosine"), col("rk"))
   }
@@ -1378,7 +1332,6 @@ object VectorOps {
   private def graphBeamSearch(emb: DataFrame, edges: DataFrame,
                               entries: DataFrame, queryMaxId: Long, k: Int,
                               beam: Int, rounds: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = graft.CacheScope.persist(
       emb.select(col("vec_id"), quant.as("q"))
         .withColumn("n2", dot(col("q"), col("q"))))
@@ -1398,9 +1351,8 @@ object VectorOps {
     var visited = score(qs.select(col("q_id")).crossJoin(broadcast(entries)))
       .localCheckpoint()
     for (_ <- 1 to rounds) {
-      val beamDf = visited.withColumn("rk", row_number().over(
-          Window.partitionBy(col("q_id")).orderBy(col("c").desc, col("vec_id"))))
-        .filter(col("rk") <= beam).select(col("q_id"), col("vec_id"))
+      val beamDf = visited.transform(topK(col("c").desc, beam))
+        .select(col("q_id"), col("vec_id"))
       val nbrs = beamDf.join(edges, beamDf("vec_id") === edges("src"))
         .select(col("q_id"), col("dst").as("vec_id"))
       // score ONLY the unvisited frontier expansion — already-scored
@@ -1412,9 +1364,7 @@ object VectorOps {
       visited = visited.union(score(fresh)).localCheckpoint()
     }
     visited.filter(col("vec_id") =!= col("q_id"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("c").desc, col("vec_id"))))
-      .filter(col("rk") <= k)
+      .transform(topK(col("c").desc, k))
       .select(col("q_id"), col("vec_id"),
         round(col("c") + lit(1e-9), 6).as("cosine"), col("rk"))
   }
@@ -1430,10 +1380,16 @@ object VectorOps {
     * join keys on leg, and a leg past its own `rounds` stops expanding
     * (its rows ride the remaining checkpoints unchanged), so per-leg
     * rows are IDENTICAL to a solo [[graphBeamSearch]] run — GraphAnnSpec
-    * pins the router legs against the solo spelling. Output:
-    * (leg, q_id, vec_id, cosine, rk). */
-  private def graphBeamSearchLegs(emb: DataFrame, legs: Seq[BeamLeg],
-                                  queryMaxId: Long, k: Int): DataFrame = {
+    * pins the router legs against the solo spelling. Because every
+    * join and window keys on the leg name, two legs with one name would
+    * silently merge their frontiers, so duplicate names are rejected.
+    * Output: (leg, q_id, vec_id, cosine, rk). */
+  private[graft] def graphBeamSearchLegs(emb: DataFrame, legs: Seq[BeamLeg],
+                                         queryMaxId: Long, k: Int): DataFrame = {
+    val dup = legs.groupBy(_.name).collect { case (n, ls) if ls.size > 1 => n }
+    require(dup.isEmpty, s"graft beam search: duplicate leg name(s) " +
+      s"${dup.toSeq.sorted.mkString("'", "', '", "'")} — legs are keyed by name, " +
+      "so same-named legs would merge their frontiers")
     import org.apache.spark.sql.expressions.Window
     val e = graft.CacheScope.persist(
       emb.select(col("vec_id"), quant.as("q"))
@@ -1678,7 +1634,7 @@ object VectorOps {
     val probes = kmeansRanked(emb.filter(col("vec_id") < queryMaxId),
         art.cents, nprobe)
       .select(col("vec_id").as("q_id"), col("cid"))
-    scoreCandidates(emb,
+    serveScore(emb, emb,
       probes.join(art.cells, Seq("cid"))
         .filter(col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("vec_id")), k)

@@ -309,6 +309,19 @@ class GraphAnnSpec extends SparkSpec {
     }
   }
 
+  test("fused beam search rejects duplicate leg names, naming the leg") {
+    // every join and window of the fused search keys on the leg name,
+    // so two same-named legs would merge their frontiers silently
+    val none = clustered.limit(0) // rejected before any frame is read
+    val legs = Seq(VectorOps.BeamLeg("beam_8x3", none, none, 8, 3),
+      VectorOps.BeamLeg("beam_16x4", none, none, 16, 4),
+      VectorOps.BeamLeg("beam_8x3", none, none, 32, 6))
+    val e = intercept[IllegalArgumentException](
+      VectorOps.graphBeamSearchLegs(clustered, legs, queryMaxId = 5, k = 3))
+    assert(e.getMessage.contains("duplicate leg name(s) 'beam_8x3'"), e.getMessage)
+    assert(!e.getMessage.contains("beam_16x4"), e.getMessage)
+  }
+
   test("annServeAuto serves exactly what the router picked, on both corpus shapes") {
     def directOf(emb: org.apache.spark.sql.DataFrame): Set[Seq[Any]] = {
       val pick = VectorOps.serveModeDiagnostic(emb, queryMaxId = 5, k = 3)

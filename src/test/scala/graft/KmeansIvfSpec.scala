@@ -67,7 +67,7 @@ class KmeansIvfSpec extends SparkSpec {
     val cands = probes.join(cells, Seq("cid"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"))
-    val scratch = VectorOps.scoreCandidates(clustered, cands, 3)
+    val scratch = VectorOps.serveScore(clustered, clustered, cands, 3)
       .collect().map(_.toSeq).toSet
     assert(appended == scratch,
       s"append served ${appended.size} rows != from-scratch ${scratch.size}")

@@ -74,14 +74,35 @@ class PlanSpec extends SparkSpec {
     "dedup_substr_k_sweep" -> "crossJoin of the 4-row per-k trim-mass frame with the 1-row corpus-totals aggregate (n_docs, tot_tokens) — both sides grid/single-row bounded",
     "ann_serve_pick_roundtrip" -> "the RETURNED plan is the cached picked-mode serve; when the pick is a full-scan compressed mode (sq8/matryoshka — the bytes-cheapest eligible on this fixture) it crossJoins the <= 10-row broadcast query set, the ann_sq8_recall shape; the diagnostic with its whitelisted brute leg runs during the driver-side persist, not in the returned plan")
 
-  test("no query plan contains an unbounded cartesian or accidental nested-loop join") {
+  /** Every query of the surface built ONCE for both whole-surface guards:
+    * (name, the executed plan's text or "PLANNING FAILED: …", the
+    * window expressions of each unpartitioned window in the optimized
+    * plan). Building a query runs real jobs wherever it checkpoints or
+    * collects eagerly, so this build is most of the spec's time. */
+  private lazy val surface: Seq[(String, String, Seq[String])] = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
     val sf = "/root/testdata/sf0.001"
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val plan =
-        try fn(spark, sf).queryExecution.executedPlan.toString
-        catch { case e: Throwable => s"PLANNING FAILED: ${e.getMessage}" }
-      (name, plan)
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val qe =
+        try Right(fn(spark, sf).queryExecution)
+        catch { case e: Throwable => Left(e) }
+      val plan = qe.flatMap { q =>
+        try Right(q.executedPlan.toString) catch { case e: Throwable => Left(e) }
+      }.fold(e => s"PLANNING FAILED: ${e.getMessage}", identity)
+      // planning failures are asserted empty by the join guard
+      val wins = qe.toOption.toSeq.flatMap { q =>
+        try q.optimizedPlan.collect {
+          case w: LWindow if w.partitionSpec.isEmpty => w.windowExpressions.mkString(",") }
+        catch { case _: Throwable => Nil }
+      }
+      (name, plan, wins)
     }
+  }
+
+  /** The join-shape gate over (name, executed plan) pairs: no planning
+    * failure, no CartesianProduct, no BroadcastNestedLoopJoin outside
+    * the whitelist, and no whitelist entry whose plan no longer needs it. */
+  private def assertJoinShapes(results: Seq[(String, String)]): Unit = {
     val planningFailures = results.collect {
       case (n, p) if p.startsWith("PLANNING FAILED") => s"$n: $p" }
     assert(planningFailures.isEmpty, planningFailures.mkString("\n"))
@@ -100,6 +121,19 @@ class PlanSpec extends SparkSpec {
     assert(stale.isEmpty, s"whitelist entries no longer needed: $stale")
   }
 
+  test("no query plan contains an unbounded cartesian or accidental nested-loop join") {
+    assertJoinShapes(surface.map { case (n, p, _) => (n, p) })
+  }
+
+  test("the join gate fails a planted un-whitelisted crossJoin of two table scans") {
+    val dir = "target/graft-tmp/planspec_planted"
+    for (t <- Seq("a", "b")) spark.range(1000).write.mode("overwrite").parquet(s"$dir/$t")
+    val planted = spark.read.parquet(s"$dir/a").crossJoin(spark.read.parquet(s"$dir/b"))
+    val e = intercept[org.scalatest.exceptions.TestFailedException](
+      assertJoinShapes(Seq("planted_scan_cross_join" -> planted.queryExecution.executedPlan.toString)))
+    assert(e.getMessage.contains("planted_scan_cross_join"), e.getMessage)
+  }
+
   /** name -> the bound that keeps its empty-partition-spec window safe.
     * An EMPTY partitionSpec means Spark moves the window's entire input
     * through ONE task with a full sort — the exact shape that melted
@@ -113,18 +147,8 @@ class PlanSpec extends SparkSpec {
   private val allowedGlobalWindow: Map[String, String] = Map.empty
 
   test("no query plans an unpartitioned window over an unbounded relation") {
-    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
-    val sf = "/root/testdata/sf0.001"
-    val hits = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      // planning failures are asserted empty by the cartesian guard above
-      val wins =
-        try fn(spark, sf).queryExecution.optimizedPlan.collect {
-          case w: LWindow if w.partitionSpec.isEmpty => w }
-        catch { case _: Throwable => Nil }
-      if (wins.nonEmpty)
-        Some(name -> wins.map(_.windowExpressions.mkString(",")).mkString("; "))
-      else None
-    }
+    val hits = surface.collect {
+      case (name, _, wins) if wins.nonEmpty => name -> wins.mkString("; ") }
     val unvetted = hits.filterNot { case (n, _) => allowedGlobalWindow.contains(n) }
     assert(unvetted.isEmpty,
       s"unpartitioned (single-task, full-sort) window in: ${unvetted.map(_._1)} — " +
