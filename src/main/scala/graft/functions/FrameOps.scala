@@ -1,4 +1,4 @@
-package graft.pipeline
+package graft.functions
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._

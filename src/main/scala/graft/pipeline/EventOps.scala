@@ -339,7 +339,7 @@ object EventOps {
 
   /** HOT-KEY skew diagnostic — the measurement that decides whether a
     * downstream join/groupBy on `keyCol` needs salting
-    * ([[FrameOps.saltedJoin]]) or AQE skew handling: the top `k` keys by
+    * ([[graft.functions.FrameOps.saltedJoin]]) or AQE skew handling: the top `k` keys by
     * row count with each key's share of all rows and the cumulative
     * share (top-1 share ≈ 1/partitions is the classic straggler
     * threshold). One corpus-sized shuffle (the groupBy on the key, with

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.functions.TextCols
 import graft.pipeline.DedupOps.hex60
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -90,11 +91,11 @@ object SketchOps {
     * is idempotent over repeats), but a streaming caller needs the
     * stateless form: the groupBy-MAX then runs as a plain update-mode
     * streaming aggregation whose store state is the registers
-    * themselves (see [[graft.streaming.StreamingJobs.hllRegisterStream]]). */
+    * themselves (see [[CurationStreams.hllRegisterStream]]). */
   def hllRegisters(docs: DataFrame, p: Int,
                    dedupTokens: Boolean = true): DataFrame = {
     val m = 1 << p
-    val base = docs.select(col("source"), explode(array_distinct(TextOps.tokens)).as("t"))
+    val base = docs.select(col("source"), explode(array_distinct(TextCols.tokens)).as("t"))
     (if (dedupTokens) base.distinct() else base)
       .withColumn("h", hex60(md5(concat(lit("hll:"), col("t")))))
       .withColumn("r", expr(s"h div ${1L << 52}") % m)
@@ -136,7 +137,7 @@ object SketchOps {
       "p in [4, 8]: the register index is the TOP p bits of the 60-bit hash\n"
         + "and the rank window is fixed at the low 52 bits, so p > 8 would\n"
         + "leave registers beyond 2^8 permanently empty")
-    val tok = docs.select(col("source"), explode(array_distinct(TextOps.tokens)).as("t"))
+    val tok = docs.select(col("source"), explode(array_distinct(TextCols.tokens)).as("t"))
       .distinct()
     val exact = tok.groupBy(col("source")).agg(count(lit(1)).as("exact_n"))
     hllEstimate(hllRegisters(docs, p), exact, "source", p)
@@ -148,7 +149,7 @@ object SketchOps {
     * production metrics store keeps (registers compose by MAX across
     * buckets AND across shards, so daily = max-merge of the hours, and
     * the same groupBy-MAX runs as an update-mode streaming aggregation
-    * like [[graft.streaming.StreamingJobs.hllRegisterStream]]). Same
+    * like [[CurationStreams.hllRegisterStream]]). Same
     * exact-integer estimator as [[hllDistinct]]: the harmonic-mean
     * denominator is Σ 2^(53−M_r) in BIGINT, the only floats are one
     * division and (small-range) one ln. */

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.functions.TextCols.{langMarkers, markerCount, tokens}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -12,21 +13,6 @@ import org.apache.spark.sql.functions._
   * document count — no shuffles except where aggregation is the point.
   */
 object TextOps {
-
-  /** Whitespace tokens of the `text` column. */
-  val tokens: Column = split(col("text"), " ")
-
-  /** Per-language marker-word lists for the n-gram/stopword language-ID
-    * heuristic (public-knowledge function words). */
-  val langMarkers: Seq[(String, Seq[String])] = Seq(
-    "de" -> Seq("der", "die", "das", "und", "ist", "von", "mit", "ein"),
-    "en" -> Seq("the", "a", "of", "and", "to", "in", "is", "it"),
-    "es" -> Seq("el", "los", "y", "es", "un", "una", "que", "por"),
-    "fr" -> Seq("le", "les", "et", "est", "une", "du", "dans", "pour"),
-    "zh" -> Seq("的", "是", "了", "在", "我", "有"))
-
-  private def markerCount(ts: Column, words: Seq[String]): Column =
-    size(filter(ts, t => t.isInCollection(words)))
 
   /** Token statistics: counts, distinct counts, char length, mean token
     * length. Integer arithmetic → engine-exact. */
@@ -255,11 +241,6 @@ object TextOps {
       lit(0.2) * least(lit(1.0), meanLen / 8) +
       lit(0.2) * distinctRatio + lit(1e-9), 4)
   }
-
-  /** Marker-hit count of one language over the token split — the
-    * language-ID raw score as a reusable row-local Column. */
-  def langScore(lang: String): Column =
-    markerCount(tokens, langMarkers.toMap.apply(lang))
 
   def quality(docs: DataFrame): DataFrame = {
     val ts = tokens
@@ -2181,7 +2162,7 @@ object TextOps {
   /** SERVE-PATH classifier gate: score raw (doc_id, text) rows under
     * frozen weights — no label, no split, nothing but the text column;
     * the form an ingest stream applies per batch
-    * ([[graft.streaming.StreamingJobs.classifierGateStream]]).
+    * ([[CurationStreams.classifierGateStream]]).
     * Row-local given the literal weight array: zero shuffles, zero
     * state. */
   def classifierGate(docs: DataFrame, w: Array[Long]): DataFrame =
@@ -3365,7 +3346,7 @@ object TextOps {
     * factored out so the streaming twin is the same code: counter
     * updates are SUMS, so on a stream this exact plan runs as a plain
     * update-mode aggregation whose store state IS the d·w counters
-    * (see [[graft.streaming.StreamingJobs.cmsCounterStream]]). One
+    * (see [[CurationStreams.cmsCounterStream]]). One
     * pass: each token emits its d (row, cell) pairs; partial agg
     * combines map-side so the exchange carries ≤ d·w rows per task. */
   def cmsCounters(docs: DataFrame, d: Int = 4, w: Int = 256): DataFrame = {

@@ -1892,7 +1892,7 @@ object VectorOps {
   }
 
   /** Serve over the STREAMED-append graph artifacts — the read side of
-    * [[graft.streaming.StreamingJobs.graphIngestStream]]: base cells ∪
+    * [[CurationStreams.graphIngestStream]]: base cells ∪
     * every streamed batch's assignment, base edges ∪ streamed edges ∪
     * their HNSW back-links, entry layer recomputed over the extended
     * membership (exactly [[graphBeamAppend]]'s serve assembly, reading
@@ -1903,7 +1903,7 @@ object VectorOps {
     * incremental trade, one batch at a time.
     *
     * When NO streamed batch has landed yet (or a fold/compaction just
-    * absorbed them — [[graft.streaming.StreamingJobs.graphIngestStream]]
+    * absorbed them — [[CurationStreams.graphIngestStream]]
     * folds count-triggered, [[RefreshOps.compactGraphIndexDirs]] on
     * refresh), the serve falls back to the base artifacts alone instead
     * of throwing path-not-found on the bare glob; orphaned batch dirs

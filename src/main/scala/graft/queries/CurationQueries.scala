@@ -133,7 +133,7 @@ object CurationQueries extends QueryModule {
           valFrac = ManifestValFrac, testFrac = ManifestTestFrac)
         .filter(col("split") === "train").select(col("doc_id"))
       val counts = dd.select(col("doc_id"),
-        size(TextOps.tokens).cast("long").as("n_tokens"))
+        size(graft.functions.TextCols.tokens).cast("long").as("n_tokens"))
       val kept = sampled.select(col("doc_id"))
         .join(train, Seq("doc_id")).join(counts, Seq("doc_id"))
       val packs = TextOps.packByCounts(kept,
@@ -289,7 +289,7 @@ object CurationQueries extends QueryModule {
       BlockedHosts, BlockedPathPrefixes)),
 
     // END-TO-END WEB-INGEST FUNNEL FLAGSHIP — the batch twin of
-    // StreamingJobs.webCurationStream's stage order, reported as the
+    // CurationStreams.webCurationStream's stage order, reported as the
     // per-source funnel every crawl pipeline publishes: URL blocklist →
     // canonical-URL dedup + per-host cap → HTML extraction →
     // content-policy wordlist gate → Gopher rules, with each document

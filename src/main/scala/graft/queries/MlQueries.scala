@@ -215,7 +215,7 @@ object MlQueries extends QueryModule {
       // score and label are row-local — project both in one scan (the
       // old form joined langId's output back on doc_id)
       val scored = Tables.documents(s, d).select(
-        graft.pipeline.TextOps.langScore("en").cast("long").as("score"),
+        graft.functions.TextCols.langScore("en").cast("long").as("score"),
         when(col("lang") === "en", 1L).otherwise(0L).as("y"))
       graft.models.Isotonic.calibrate(scored)
     }))
@@ -482,7 +482,7 @@ object MlQueries extends QueryModule {
       s"SELECT scaleout, avgthr AS y FROM ($PRO) p WHERE isbckpres = 1"),
 
     "isotonic_calibrate" -> {
-      val enMarkers = graft.pipeline.TextOps.langMarkers.toMap
+      val enMarkers = graft.functions.TextCols.langMarkers.toMap
         .apply("en").map(w => s"'$w'").mkString("[", ", ", "]")
       graft.models.Isotonic.calibrateSql(
         s"""WITH sc AS (SELECT

@@ -1,9 +1,9 @@
 package graft.queries
 
 import graft.Tables
+import graft.functions.FrameOps
 import graft.models.{CandidateOps, CapacityModel}
 import graft.metrics.MetricOps
-import graft.pipeline.FrameOps
 import graft.sources.ProfilesStore
 import graft.streaming.StreamingJobs
 import org.apache.spark.sql.{DataFrame, SparkSession}

@@ -103,7 +103,7 @@ object RelationalQueries extends QueryModule {
     // campaign lookup; see FrameOps.dimBroadcast for the SF caveat).
     "j7_enrich_broadcast" -> ((s, d) =>
       Tables.events(s, d)
-        .join(graft.pipeline.FrameOps.dimBroadcast(Tables.customer(s, d)),
+        .join(graft.functions.FrameOps.dimBroadcast(Tables.customer(s, d)),
           col("user_id") === col("c_custkey"))
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n_events"), decSum(col("value")).as("total_value"))),

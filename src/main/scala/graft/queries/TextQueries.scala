@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.functions.TextCols
 import graft.pipeline.{DedupOps, TextOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -431,7 +432,7 @@ object TextQueries extends QueryModule {
       // on doc_id — two corpus shuffles for in-row values)
       docs(s, d)
         .select(col("source"), TextOps.qualityCol.as("quality"),
-          size(TextOps.tokens).as("n_tokens"))
+          size(TextCols.tokens).as("n_tokens"))
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"),
           sum(col("n_tokens")).as("total_tokens"),
@@ -1012,7 +1013,7 @@ object TextQueries extends QueryModule {
   /** Shared oracle CTE chain `qq(doc_id, quality)` — the text_quality
     * score spelling, factored for the AUC / adaptive-threshold oracles. */
   private[queries] val qualityCte = {
-    val en = TextOps.langMarkers.toMap.apply("en")
+    val en = TextCols.langMarkers.toMap.apply("en")
       .map(w => s"'$w'").mkString("[", ", ", "]")
     s"""qt AS (SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
        |qm AS (SELECT doc_id,
@@ -1187,7 +1188,7 @@ object TextQueries extends QueryModule {
         |FROM documents""".stripMargin,
 
     "text_quality" -> {
-      val en = TextOps.langMarkers.toMap.apply("en")
+      val en = TextCols.langMarkers.toMap.apply("en")
         .map(w => s"'$w'").mkString("[", ", ", "]")
       s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
          |m AS (SELECT doc_id,
@@ -1423,7 +1424,7 @@ object TextQueries extends QueryModule {
     },
 
     "corpus_source_stats" -> {
-      val en = TextOps.langMarkers.toMap.apply("en")
+      val en = TextCols.langMarkers.toMap.apply("en")
         .map(w => s"'$w'").mkString("[", ", ", "]")
       s"""WITH t AS (SELECT doc_id, source, string_split(text, ' ') AS ts FROM documents),
          |m AS (SELECT doc_id, source, len(ts) AS n_tokens,
@@ -1444,11 +1445,11 @@ object TextQueries extends QueryModule {
     },
 
     "text_lang_id" -> {
-      val scores = TextOps.langMarkers.map { case (l, ws) =>
+      val scores = TextCols.langMarkers.map { case (l, ws) =>
         val arr = ws.map(w => s"'$w'").mkString("[", ", ", "]")
         s"len(list_filter(string_split(text, ' '), t -> list_contains($arr, t))) AS s_$l"
       }.mkString(",\n  ")
-      val langs = TextOps.langMarkers.map(_._1)
+      val langs = TextCols.langMarkers.map(_._1)
       val m = langs.map(l => s"s_$l").mkString("greatest(", ", ", ")")
       val pred = langs.map(l => s"WHEN s_$l = m THEN '$l'").mkString(" ")
       s"""WITH sc AS (SELECT doc_id, $scores FROM documents),
@@ -1459,11 +1460,11 @@ object TextQueries extends QueryModule {
     },
 
     "lang_confusion" -> {
-      val scores = TextOps.langMarkers.map { case (l, ws) =>
+      val scores = TextCols.langMarkers.map { case (l, ws) =>
         val arr = ws.map(w => s"'$w'").mkString("[", ", ", "]")
         s"len(list_filter(string_split(text, ' '), t -> list_contains($arr, t))) AS s_$l"
       }.mkString(",\n  ")
-      val langs = TextOps.langMarkers.map(_._1)
+      val langs = TextCols.langMarkers.map(_._1)
       val m = langs.map(l => s"s_$l").mkString("greatest(", ", ", ")")
       val pred = langs.map(l => s"WHEN s_$l = m THEN '$l'").mkString(" ")
       s"""WITH sc AS (SELECT doc_id, lang, $scores FROM documents),
@@ -1842,7 +1843,7 @@ object TextQueries extends QueryModule {
         |JOIN sz sb ON sb.source = it.src_b""".stripMargin,
 
     "text_topk_per_source" -> {
-      val en = TextOps.langMarkers.toMap.apply("en")
+      val en = TextCols.langMarkers.toMap.apply("en")
         .map(w => s"'$w'").mkString("[", ", ", "]")
       s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
          |m AS (SELECT doc_id,
@@ -1875,13 +1876,13 @@ object TextQueries extends QueryModule {
     // reusing the per-stage oracles' exact spellings over the previous
     // stage's survivor set
     "corpus_pipeline" -> {
-      val en = TextOps.langMarkers.toMap.apply("en")
+      val en = TextCols.langMarkers.toMap.apply("en")
         .map(w => s"'$w'").mkString("[", ", ", "]")
-      val scores = TextOps.langMarkers.map { case (l, ws) =>
+      val scores = TextCols.langMarkers.map { case (l, ws) =>
         val arr = ws.map(w => s"'$w'").mkString("[", ", ", "]")
         s"len(list_filter(string_split(text, ' '), t -> list_contains($arr, t))) AS s_$l"
       }.mkString(",\n  ")
-      val langs = TextOps.langMarkers.map(_._1)
+      val langs = TextCols.langMarkers.map(_._1)
       val mx = langs.map(l => s"s_$l").mkString("greatest(", ", ", ")")
       val pred = langs.map(l => s"WHEN s_$l = mx THEN '$l'").mkString(" ")
       val draw = s"${hex60Sql("md5('split:' || CAST(doc_id AS VARCHAR))")} % 1000000"
@@ -2444,11 +2445,11 @@ object TextQueries extends QueryModule {
     // the four verdicts from their canonical shared CTEs (quality,
     // langID pred, gopher gr, policy pv) joined on doc_id, histogrammed
     "quality_gate_matrix" -> {
-      val scores = TextOps.langMarkers.map { case (l, ws) =>
+      val scores = TextCols.langMarkers.map { case (l, ws) =>
         val arr = ws.map(w => s"'$w'").mkString("[", ", ", "]")
         s"len(list_filter(string_split(text, ' '), t -> list_contains($arr, t))) AS s_$l"
       }.mkString(",\n  ")
-      val langs = TextOps.langMarkers.map(_._1)
+      val langs = TextCols.langMarkers.map(_._1)
       val m = langs.map(l => s"s_$l").mkString("greatest(", ", ", ")")
       val pred = langs.map(l => s"WHEN s_$l = m THEN '$l'").mkString(" ")
       s"""WITH $qualityCte,
@@ -3221,7 +3222,7 @@ object TextQueries extends QueryModule {
     val prob = (m: String) => s"$s // 2 + ($m * $s) // (2 * ($s + abs($m)))"
     // the marker injection, interpolated from the SAME langMarkers /
     // MarkerInjectK constants the Spark side injects with
-    val mcase = TextOps.langMarkers.map { case (l, ws) =>
+    val mcase = TextCols.langMarkers.map { case (l, ws) =>
       s"WHEN '$l' THEN [${ws.map(w => s"'$w'").mkString(", ")}]"
     }.mkString(" ")
     val iters = (1 to TextOps.ClsIters).map { i =>

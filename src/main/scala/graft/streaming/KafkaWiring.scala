@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
-/** S9 — Kafka source/sink wiring for the managed streaming jobs.
+/** S9 — Kafka source/sink wiring for the managed jobs of [[StreamingJobs]].
   *
   * The reference feeds its tuned jobs from a Kafka consumer topic and
   * writes results to a producer topic, with the wiring passed as program

@@ -14,7 +14,8 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 /** The reference's resident 60 s / 600 s optimization loop
   * (reference execution/phoebe/Graph.java:215-283, SURVEY.md §3.3) as
   * Structured Streaming driver logic: metrics arrive as a stream,
-  * `foreachBatch` appends them to the durable metrics store, and every
+  * `foreachBatch` appends them to the durable metrics store (keyed by
+  * query and batch id, so a replayed batch is stored once), and every
   * `evalEveryBatches`-th batch runs one evaluation tick over the stored
   * history — trailing-window averages (A3), the backpressure rule (M10
   * over M7 slopes), and the rescale decision (M13) — reporting a decision
@@ -237,7 +238,11 @@ object OptimizeLoop {
       .getOrElse(Long.MinValue)
     metrics.writeStream.trigger(trigger).foreachBatch {
       (batch: DataFrame, id: Long) =>
-        ProfilesStore.append(batch, storePath)
+        // keyed by the stream's checkpointed id and the batch id: a batch
+        // replayed from the same checkpoint replaces its first attempt
+        val query = batch.sparkSession.sparkContext.getLocalProperty("sql.streaming.queryId")
+        val batchKey = s"$query-b$id"
+        ProfilesStore.appendBatch(batch, storePath, batchKey)
         if ((id + 1) % evalEveryBatches == 0) {
           val spark = batch.sparkSession
           // the store holds what the stream appends: read it with the
@@ -265,11 +270,11 @@ object OptimizeLoop {
           // initial micro-batch): there is nothing to decide on — skip the
           // decision row instead of NPE-ing the streaming query
           stats.tickTs.foreach { tickTs =>
-            ProfilesStore.append(
+            ProfilesStore.appendBatch(
               Seq((id, tickTs, lat, thr, bck, best, resc, fNext))
                 .toDF("batch_id", "ts", "avg_lat", "avg_thr", "is_bck_pres",
                   "best_scale_out", "rescale", "forecast_next"),
-              storePath + "_decisions")
+              storePath + "_decisions", batchKey)
           }
           onDecision(id, lat, thr, bck, best, resc)
         }

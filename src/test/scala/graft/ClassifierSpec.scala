@@ -53,7 +53,7 @@ class ClassifierSpec extends SparkSpec {
       .select(col("doc_id"), col("lang"), col("text"))
       .join(docs.select(col("doc_id"), col("text").as("orig")), Seq("doc_id"))
       .collect()
-    val byLang = TextOps.langMarkers.toMap
+    val byLang = graft.functions.TextCols.langMarkers.toMap
     inj.foreach { r =>
       val added = r.getString(2).split(" ").length -
         r.getString(3).split(" ").length
@@ -125,7 +125,7 @@ class ClassifierSpec extends SparkSpec {
       .select(col("doc_id"), col("text"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     val in = MemoryStream[(Long, String)]
-    val q = graft.streaming.StreamingJobs.classifierGateStream(
+    val q = graft.pipeline.CurationStreams.classifierGateStream(
         in.toDF.toDF("doc_id", "text"), w, dir)
       .option("checkpointLocation", s"$dir/ckpt").start()
     try {

@@ -308,7 +308,7 @@ class CorpusDiagnosticsSpec extends SparkSpec {
     }
     rm(new java.io.File(dir))
     val in = MemoryStream[(Long, String)]
-    val q = graft.streaming.StreamingJobs.exactSubstrStream(
+    val q = graft.pipeline.CurationStreams.exactSubstrStream(
         in.toDS().toDF("doc_id", "text"), corpus, s"$dir/out", k = 4)
       .option("checkpointLocation", s"$dir/ckpt").start()
     try { in.addData(arrivals); q.processAllAvailable() } finally q.stop()

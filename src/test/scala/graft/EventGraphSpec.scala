@@ -196,7 +196,7 @@ class EventGraphSpec extends SparkSpec {
   }
 
   test("saltedJoin == plain inner join, and scatters a hot key") {
-    import graft.pipeline.FrameOps
+    import graft.functions.FrameOps
     val left = (1 to 200).map(i => (if (i <= 190) 7L else i.toLong, i.toLong))
       .toDF("k", "lv") // 95% of rows on key 7
     val right = Seq((7L, "hot"), (195L, "cold"), (999L, "unmatched"))

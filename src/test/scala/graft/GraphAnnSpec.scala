@@ -1,7 +1,7 @@
 package graft
 
 import graft.pipeline.VectorOps
-import graft.streaming.StreamingJobs
+import graft.pipeline.CurationStreams
 import org.apache.spark.sql.functions._
 
 /** Graph-ANN serving (graphBeamTopK): the HNSW-shape beam search over
@@ -127,7 +127,7 @@ class GraphAnnSpec extends SparkSpec {
     val tail = clustered.filter(col("vec_id") >= split)
       .as[(Long, Seq[Float])].collect().toSeq
     val in = MemoryStream[(Long, Seq[Float])]
-    val q = StreamingJobs.graphIngestStream(
+    val q = CurationStreams.graphIngestStream(
         in.toDS().toDF("vec_id", "embedding"), clustered, dir)
       .option("checkpointLocation", s"$dir/ckpt").start()
     try {
@@ -151,7 +151,7 @@ class GraphAnnSpec extends SparkSpec {
     VectorOps.graphBeamAppend(clustered, split, queryMaxId = 10, k = 3,
       indexDir = dir2).collect()
     val in2 = MemoryStream[(Long, Seq[Float])]
-    val q2 = StreamingJobs.graphIngestStream(
+    val q2 = CurationStreams.graphIngestStream(
         in2.toDS().toDF("vec_id", "embedding"), clustered, dir2)
       .option("checkpointLocation", s"$dir2/ckpt").start()
     try {
@@ -191,7 +191,7 @@ class GraphAnnSpec extends SparkSpec {
       graft.pipeline.VectorOps.graphBeamAppend(clustered, split,
         queryMaxId = 10, k = 3, indexDir = dir).collect()
       val in = MemoryStream[(Long, Seq[Float])]
-      val q = StreamingJobs.graphIngestStream(
+      val q = CurationStreams.graphIngestStream(
           in.toDS().toDF("vec_id", "embedding"), clustered, dir,
           foldEvery = foldEvery)
         .option("checkpointLocation", s"$dir/ckpt").start()
@@ -245,7 +245,7 @@ class GraphAnnSpec extends SparkSpec {
     val tail = clustered.filter(col("vec_id") >= split)
       .as[(Long, Seq[Float])].collect().toSeq
     val in = MemoryStream[(Long, Seq[Float])]
-    val q = StreamingJobs.graphIngestStream(
+    val q = CurationStreams.graphIngestStream(
         in.toDS().toDF("vec_id", "embedding"), clustered, dir)
       .option("checkpointLocation", s"$dir/ckpt").start()
     try { in.addData(tail); q.processAllAvailable() } finally q.stop()

@@ -50,7 +50,7 @@ class IsoForestSpec extends SparkSpec {
       .map(_.getSeq[Long](0).toArray)
     val cuts = IsoLocal.fit(Array.fill(IsoLocal.Trees)(vs.take(40)), dim = 8)
     val in = MemoryStream[(Long, Seq[Float])]
-    val q = graft.streaming.StreamingJobs.isoScoreStream(
+    val q = graft.pipeline.CurationStreams.isoScoreStream(
         in.toDF.toDF("vec_id", "embedding"), cuts, dir)
       .option("checkpointLocation", s"$dir/ckpt").start()
     try {

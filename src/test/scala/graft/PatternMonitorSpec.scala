@@ -1,7 +1,7 @@
 package graft
 
 import graft.metrics.MetricOps
-import graft.streaming.StreamingJobs
+import graft.pipeline.CurationStreams
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -44,7 +44,7 @@ class PatternMonitorSpec extends SparkSpec {
       .select(col("sid"), col("ts"), quant.as("vi")).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     val in = MemoryStream[(String, Long, Long)]
-    val q = StreamingJobs.patternMonitorStream(
+    val q = CurationStreams.patternMonitorStream(
         in.toDS(), qv, win = 24, step = 3600L)
       .writeStream.outputMode("append").format("memory")
       .queryName(s"pm_${System.nanoTime()}").start()

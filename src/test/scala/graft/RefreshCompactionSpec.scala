@@ -209,7 +209,7 @@ class RefreshCompactionSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val in = MemoryStream[(Long, String)]
-    val q = graft.streaming.StreamingJobs.exactSubstrIndexedStream(
+    val q = graft.pipeline.CurationStreams.exactSubstrIndexedStream(
         in.toDS().toDF("doc_id", "text"), s"$dir/index", s"$dir/out", k = 4)
       .option("checkpointLocation", s"$dir/ckpt").start()
     try {

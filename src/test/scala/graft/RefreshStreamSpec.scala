@@ -1,7 +1,7 @@
 package graft
 
 import graft.pipeline.VectorOps
-import graft.streaming.StreamingJobs
+import graft.pipeline.CurationStreams
 import org.apache.spark.sql.functions._
 
 /** The streaming incremental-refresh twin: gates, band-state near-dup
@@ -41,7 +41,7 @@ class RefreshStreamSpec extends SparkSpec {
       .select(col("cid").cast("long")).head.getLong(0)
 
     val in = MemoryStream[(Long, Long, String, String, Seq[Float])]
-    val q = StreamingJobs.refreshStream(in.toDS(), cents)
+    val q = CurationStreams.refreshStream(in.toDS(), cents)
       .writeStream.format("memory").queryName("refresh_stream")
       .outputMode("append").start()
     def fates() = spark.table("refresh_stream").collect()
@@ -78,7 +78,7 @@ class RefreshStreamSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val in = MemoryStream[(Long, Long, String, String, Seq[Float])]
-    val q = StreamingJobs.refreshStream(in.toDS(), mkCents)
+    val q = CurationStreams.refreshStream(in.toDS(), mkCents)
       .writeStream.format("noop").outputMode("append").start()
     // distinct gate-passing texts per (doc, version): 24 words, 2
     // stopwords, every content word 5 chars
@@ -108,7 +108,7 @@ class RefreshStreamSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val in = MemoryStream[(Long, Long, String, String, Seq[Float])]
-    val q = StreamingJobs.refreshStream(in.toDS(), mkCents)
+    val q = CurationStreams.refreshStream(in.toDS(), mkCents)
       .writeStream.format("memory").queryName("refresh_ghost")
       .outputMode("append").start()
     try {
@@ -140,7 +140,7 @@ class RefreshStreamSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val in = MemoryStream[(Long, Long, String, String, Seq[Float])]
-    val q = StreamingJobs.refreshStream(in.toDS(), mkCents)
+    val q = CurationStreams.refreshStream(in.toDS(), mkCents)
       .writeStream.format("memory").queryName("refresh_seq")
       .outputMode("append").start()
     try {
@@ -179,7 +179,7 @@ class RefreshStreamSpec extends SparkSpec {
     // (J = 0.733 >= 0.5) -> near_dup. This leg also PROVES the band
     // collision exists, so leg 2 can't pass vacuously.
     val in1 = MemoryStream[(Long, Long, String, String, Seq[Float])]
-    val q1 = StreamingJobs.refreshStream(in1.toDS(), mkCents)
+    val q1 = CurationStreams.refreshStream(in1.toDS(), mkCents)
       .writeStream.format("memory").queryName("refresh_verify_lo")
       .outputMode("append").start()
     try {
@@ -197,7 +197,7 @@ class RefreshStreamSpec extends SparkSpec {
     // verification screens it out and the doc indexes fresh (what batch
     // probeDupHits does; a collision alone must never classify)
     val in2 = MemoryStream[(Long, Long, String, String, Seq[Float])]
-    val q2 = StreamingJobs.refreshStream(in2.toDS(), mkCents, threshold = 0.8)
+    val q2 = CurationStreams.refreshStream(in2.toDS(), mkCents, threshold = 0.8)
       .writeStream.format("memory").queryName("refresh_verify_hi")
       .outputMode("append").start()
     try {
@@ -217,7 +217,7 @@ class RefreshStreamSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val in = MemoryStream[(Long, Long, String, String, Seq[Float])]
-    val q = StreamingJobs.refreshStream(in.toDS(), mkCents, maxBandBucket = 2)
+    val q = CurationStreams.refreshStream(in.toDS(), mkCents, maxBandBucket = 2)
       .writeStream.format("memory").queryName("refresh_hotcap")
       .outputMode("append").start()
     try {
@@ -268,8 +268,8 @@ class RefreshStreamSpec extends SparkSpec {
     // the NEW snapshot lookup both engines read band keys from
     val newDocs = Seq((1L, textA), (3L, textC)).toDF("doc_id", "text")
     val in = MemoryStream[(Long, Long, String, String, Seq[Float])]
-    def startQ() = StreamingJobs.refreshCompactionStream(
-        StreamingJobs.refreshStream(in.toDS(), cents),
+    def startQ() = CurationStreams.refreshCompactionStream(
+        CurationStreams.refreshStream(in.toDS(), cents),
         newDocs, s"$dir/artifacts")
       .option("checkpointLocation", s"$dir/ckpt").start()
     // trigger 1: doc 1 arrives (indexed)
@@ -329,7 +329,7 @@ class RefreshStreamSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val in = MemoryStream[(Long, Long, String, String, Seq[Float])]
-    val q = StreamingJobs.refreshStream(in.toDS(), mkCents)
+    val q = CurationStreams.refreshStream(in.toDS(), mkCents)
       .writeStream.format("memory").queryName("refresh_stream2")
       .outputMode("append").start()
     try {

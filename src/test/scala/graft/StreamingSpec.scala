@@ -1,5 +1,6 @@
 package graft
 
+import graft.pipeline.CurationStreams
 import graft.streaming.StreamingJobs
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -8,9 +9,12 @@ import java.sql.Timestamp
 
 /** A18/A19 as REAL Structured Streaming queries over a MemoryStream:
   * watermarked windowed aggregation, incremental batches, and agreement
-  * with the batch form of the same plan. */
+  * with the batch form of the same plan. The tests of the curation
+  * streams carry the [[StreamingSpec.Curation]] tag, so the core's
+  * tests run alone with `-- -l graft.CurationStream`. */
 class StreamingSpec extends SparkSpec {
 
+  import StreamingSpec.Curation
   import spark.implicits._
 
   private def ts(s: Long): Timestamp = new Timestamp(s * 1000)
@@ -113,6 +117,12 @@ class StreamingSpec extends SparkSpec {
         producerTopic = "sessions"))
     }
     assert(e2.getMessage.toLowerCase.contains("kafka"))
+    val e3 = intercept[Exception] {
+      KafkaWiring.campaignKafka(spark, KafkaWiring.KafkaConf(
+        brokerList = "localhost:9092", consumerTopic = "ads",
+        producerTopic = "campaign_counts"), Seq((1L, "c1")).toDF("c_custkey", "campaign"))
+    }
+    assert(e3.getMessage.toLowerCase.contains("kafka"))
   }
 
   test("kafka-shaped stream: decode -> session windows -> encode, append-once") {
@@ -261,7 +271,7 @@ class StreamingSpec extends SparkSpec {
     } finally { loop.stop(); managed.stop() }
   }
 
-  test("streaming ANN ingest: per-batch centroid assignment equals one-pass assignment") {
+  test("streaming ANN ingest: per-batch centroid assignment equals one-pass assignment", Curation) {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     import graft.pipeline.VectorOps
@@ -272,7 +282,7 @@ class StreamingSpec extends SparkSpec {
     val base = (0L until 40L).map(mk).toDF("vec_id", "embedding")
     val cents = VectorOps.kmeansCentroids(base)
     val in = MemoryStream[(Long, Seq[Float])]
-    val q = StreamingJobs.annIngest(in.toDF.toDF("vec_id", "embedding"),
+    val q = CurationStreams.annIngest(in.toDF.toDF("vec_id", "embedding"),
         cents, s"$dir/cells_new")
       .option("checkpointLocation", s"$dir/ckpt").start()
     try {
@@ -291,7 +301,7 @@ class StreamingSpec extends SparkSpec {
     assert(streamed == oneShot && streamed.size == 30)
   }
 
-  test("streaming ANN serving: per-batch frozen-index search equals the one-shot serve") {
+  test("streaming ANN serving: per-batch frozen-index search equals the one-shot serve", Curation) {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     import graft.pipeline.VectorOps
@@ -305,7 +315,7 @@ class StreamingSpec extends SparkSpec {
       .select(col("vec_id"), col("cid"))
       .write.mode("overwrite").parquet(s"$dir/cells")
     val in = MemoryStream[(Long, Seq[Float])]
-    val q = StreamingJobs.annServeStream(in.toDF.toDF("vec_id", "embedding"),
+    val q = CurationStreams.annServeStream(in.toDF.toDF("vec_id", "embedding"),
         cents, Seq(s"$dir/cells"), corpus, k = 3, outDir = s"$dir/out")
       .option("checkpointLocation", s"$dir/ckpt").start()
     try {
@@ -335,7 +345,7 @@ class StreamingSpec extends SparkSpec {
     assert(streamed.forall(_._4 <= 3))
   }
 
-  test("streaming BPE token billing: per-batch frozen encode equals the batch bill") {
+  test("streaming BPE token billing: per-batch frozen encode equals the batch bill", Curation) {
     implicit val sqlCtx = spark.sqlContext
     import graft.pipeline.TextOps
     val dir = s"target/graft-tmp/bpe_bill_spec_${System.nanoTime()}"
@@ -348,7 +358,7 @@ class StreamingSpec extends SparkSpec {
     val streamDocs = Seq((1L, "abab abab abc"), (2L, "abc aaaa ab"),
       (3L, "ab ab abab"), (4L, "aaaa abc abab"), (9L, "ababab zzz ab"))
     val in = MemoryStream[(Long, String)]
-    val q = StreamingJobs.tokenBillStream(
+    val q = CurationStreams.tokenBillStream(
         in.toDF.toDF("doc_id", "text"), merges, dir)
       .option("checkpointLocation", s"$dir/ckpt").start()
     try {
@@ -372,7 +382,7 @@ class StreamingSpec extends SparkSpec {
     assert(streamed.filter(_._1 <= 4L) == learnBill)
   }
 
-  test("streaming PCA scoring: per-batch frozen projection equals the batch pass") {
+  test("streaming PCA scoring: per-batch frozen projection equals the batch pass", Curation) {
     implicit val sqlCtx = spark.sqlContext
     import graft.pipeline.VectorOps
     val dir = s"target/graft-tmp/pca_score_spec_${System.nanoTime()}"
@@ -382,7 +392,7 @@ class StreamingSpec extends SparkSpec {
     val fit = VectorOps.pcaFit(fitCorpus)
     val arriving = (100L until 130L).map(mk)
     val in = MemoryStream[(Long, Seq[Float])]
-    val q = StreamingJobs.pcaScoreStream(
+    val q = CurationStreams.pcaScoreStream(
         in.toDF.toDF("vec_id", "embedding"), fit, dir)
       .option("checkpointLocation", s"$dir/ckpt").start()
     try {
@@ -399,7 +409,7 @@ class StreamingSpec extends SparkSpec {
     assert(streamed == oneShot && streamed.size == 30)
   }
 
-  test("streaming anomaly monitor: accumulated-store rescore equals the batch monitor") {
+  test("streaming anomaly monitor: accumulated-store rescore equals the batch monitor", Curation) {
     implicit val sqlCtx = spark.sqlContext
     import graft.pipeline.EventOps
     val dir = s"target/graft-tmp/anomaly_spec_${System.nanoTime()}"
@@ -408,7 +418,7 @@ class StreamingSpec extends SparkSpec {
       (0 until 5 + (h % 3)).map(i => (ts(h * 3600L + i * 60), "click", 1.0))
     } ++ (0 until 60).map(i => (ts(30 * 3600L + i * 10), "click", 1.0))
     val in = MemoryStream[(Timestamp, String, Double)]
-    val q = StreamingJobs.anomalyStream(
+    val q = CurationStreams.anomalyStream(
         in.toDF.toDF("ts", "event_type", "value"), dir)
       .option("checkpointLocation", s"$dir/ckpt").start()
     try {
@@ -430,7 +440,7 @@ class StreamingSpec extends SparkSpec {
     assert(batch.exists(r => r(1) == 30L * 3600 && r(2) == 60L))
   }
 
-  test("streaming shard manifest: folded per-batch deltas equal the one-shot manifest") {
+  test("streaming shard manifest: folded per-batch deltas equal the one-shot manifest", Curation) {
     // the checksum's mergeability is the contract: counts and the
     // mod-2^60 sum fold across arbitrary batching into exactly the
     // batch manifest of everything ingested
@@ -442,7 +452,7 @@ class StreamingSpec extends SparkSpec {
     val b2 = Seq((3L, "kappa lambda"), (40L, "mu nu xi omicron pi"),
       (55L, "rho sigma"))
     val in = MemoryStream[(Long, String)]
-    val q = StreamingJobs.manifestStream(in.toDF.toDF("doc_id", "text"), dir)
+    val q = CurationStreams.manifestStream(in.toDF.toDF("doc_id", "text"), dir)
       .option("checkpointLocation", s"$dir/ckpt").start()
     try {
       in.addData(b1); q.processAllAvailable()
@@ -456,7 +466,7 @@ class StreamingSpec extends SparkSpec {
     assert(streamed == oneShot && streamed.nonEmpty)
   }
 
-  test("streaming reference-LM scoring: frozen model equals the batch pass") {
+  test("streaming reference-LM scoring: frozen model equals the batch pass", Curation) {
     implicit val sqlCtx = spark.sqlContext
     import graft.pipeline.TextOps
     val dir = s"target/graft-tmp/reflm_score_spec_${System.nanoTime()}"
@@ -468,7 +478,7 @@ class StreamingSpec extends SparkSpec {
     val arriving = Seq((10L, "the cat ran"), (11L, "zz yy xx"),
       (12L, "a dog sat fast"), (13L, "the the the"))
     val in = MemoryStream[(Long, String)]
-    val q = StreamingJobs.refLmScoreStream(
+    val q = CurationStreams.refLmScoreStream(
         in.toDF.toDF("doc_id", "text"), model, dir)
       .option("checkpointLocation", s"$dir/ckpt").start()
     try {
@@ -489,7 +499,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("composed curation stream: gate -> dedup state -> frozen-BPE billing -> " +
-       "anomaly monitor equals the batch gates across a stop/restart") {
+       "anomaly monitor equals the batch gates across a stop/restart", Curation) {
     // the end-to-end loader: ONE query, ONE checkpoint. Restart between
     // the two batches proves the dedup state store AND the compacted
     // anomaly store both survive a stop/restart (a dup of a batch-1 doc
@@ -507,7 +517,7 @@ class StreamingSpec extends SparkSpec {
       StructField("text", StringType)))
     val merges = Seq("t" -> "h", "th" -> "e", "e" -> "s")
     def start(): StreamingQuery =
-      StreamingJobs.curationStream(
+      CurationStreams.curationStream(
           spark.readStream.schema(schema).parquet(s"$base/src"),
           merges, s"$base/out", watermark = "30 days", minBaseline = 3)
         .option("checkpointLocation", s"$base/ckpt").start()
@@ -578,7 +588,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("composed raw-web curation stream: url policy -> url dedup state -> extract -> " +
-       "gate -> content dedup state equals the batch chain across a stop/restart") {
+       "gate -> content dedup state equals the batch chain across a stop/restart", Curation) {
     // the crawl-ingest twin: ONE query, ONE checkpoint, TWO keyed-state
     // stores (canonical URL, then content fingerprint). The restart
     // between the batches proves BOTH stores restore: a post-restart
@@ -598,7 +608,7 @@ class StreamingSpec extends SparkSpec {
     val hosts = Seq("bad.example.com")
     val prefixes = Seq("/spam")
     def start(): StreamingQuery =
-      StreamingJobs.webCurationStream(
+      CurationStreams.webCurationStream(
           spark.readStream.schema(schema).parquet(s"$base/src"),
           merges, s"$base/out", hosts, prefixes,
           // cap high: THIS test isolates the two dedup stores (doc 12's
@@ -677,7 +687,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming per-host cap: admitted set equals the batch urlCanonicalDedup(maxPerHost) " +
-       "survivors on the same timeline, including across a stop/restart") {
+       "survivors on the same timeline, including across a stop/restart", Curation) {
     // the r12 parity gap: batch web_pipeline capped survivors per host,
     // the streaming twin didn't. hostCapStream closes it — one counter
     // per host under the same checkpoint as the two dedup stores. The
@@ -698,7 +708,7 @@ class StreamingSpec extends SparkSpec {
       StructField("url", StringType), StructField("atext", StringType)))
     val merges = Seq("t" -> "h", "th" -> "e")
     def start(): StreamingQuery =
-      StreamingJobs.webCurationStream(
+      CurationStreams.webCurationStream(
           spark.readStream.schema(schema).parquet(s"$base/src"),
           merges, s"$base/out", Nil, Nil, maxPerHost = 2,
           watermark = "30 days", minBaseline = 3)
@@ -751,7 +761,7 @@ class StreamingSpec extends SparkSpec {
     assert(!streamIds.contains(26L)) // URL dup: dropped before the cap
   }
 
-  test("rescaler manages the curation stream: dedup state and billing stay exactly-once across a rescale") {
+  test("rescaler manages the curation stream: dedup state and billing stay exactly-once across a rescale", Curation) {
     // the reference's optimize/rescale machinery applied to the
     // LLM-pipeline flagship instead of a toy job: the curation query is
     // stopped and restarted from its checkpoint at a new parallelism
@@ -771,7 +781,7 @@ class StreamingSpec extends SparkSpec {
       StructField("text", StringType)))
     val merges = Seq("t" -> "h", "th" -> "e")
     def start(parallelism: Int): StreamingQuery =
-      StreamingJobs.curationStream(
+      CurationStreams.curationStream(
           spark.readStream.schema(schema).parquet(s"$base/src")
             .repartition(parallelism),
           merges, s"$base/out", watermark = "30 days", minBaseline = 3)
@@ -817,7 +827,7 @@ class StreamingSpec extends SparkSpec {
     } finally q2.stop()
   }
 
-  test("streaming funnel: O(1) keyed state emits completions across batches, equals the batch chain") {
+  test("streaming funnel: O(1) keyed state emits completions across batches, equals the batch chain", Curation) {
     import graft.pipeline.EventOps
     implicit val sqlCtx = spark.sqlContext
     val steps = Seq("a", "b", "c")
@@ -825,7 +835,7 @@ class StreamingSpec extends SparkSpec {
       (3L, 50L, "a"), (3L, 50L, "b"), (1L, 130L, "x"))
     val b2 = Seq((1L, 200L, "c"), (2L, 110L, "a"), (2L, 120L, "b"))
     val in = MemoryStream[(Long, Long, String)]
-    val q = StreamingJobs.funnelStream(in.toDS(), steps)
+    val q = CurationStreams.funnelStream(in.toDS(), steps)
       .writeStream.format("memory").queryName("funnel_stream")
       .outputMode("append").start()
     try {
@@ -856,7 +866,7 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streaming exact dedup: state drops cross-batch duplicates") {
+  test("streaming exact dedup: state drops cross-batch duplicates", Curation) {
     // the dedup family's streaming form: dropDuplicates keyed on content
     // id with a watermark bounding state. The guarantee is one row per
     // key with duplicates in LATER micro-batches dropped by the state
@@ -881,7 +891,7 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streaming near-dup candidates: band-key keyed state across batches") {
+  test("streaming near-dup candidates: band-key keyed state across batches", Curation) {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, String)]
     val textA = "alpha beta gamma delta epsilon zeta eta theta"
@@ -889,7 +899,7 @@ class StreamingSpec extends SparkSpec {
     // stateTtl=None (batch-parity mode): a processing-time TTL makes the
     // engine run continuous timeout-check micro-batches, which busy-loops
     // under the test's 0 ms trigger and starves processAllAvailable
-    val q = StreamingJobs.nearDupCandidates(in.toDF.toDF("doc_id", "text"), stateTtl = None)
+    val q = CurationStreams.nearDupCandidates(in.toDF.toDF("doc_id", "text"), stateTtl = None)
       .writeStream.format("memory").queryName("neardup_stream")
       .outputMode("append").start()
     try {
@@ -911,12 +921,12 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streaming soft-dedup weights: counts settle to the batch cluster sizes on a star corpus") {
+  test("streaming soft-dedup weights: counts settle to the batch cluster sizes on a star corpus", Curation) {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, String)]
     val textA = "alpha beta gamma delta epsilon zeta eta theta"
     val textB = "one two three four five six seven eight nine"
-    val q = StreamingJobs.softWeightStream(in.toDF.toDF("doc_id", "text"))
+    val q = CurationStreams.softWeightStream(in.toDF.toDF("doc_id", "text"))
       .writeStream.format("memory").queryName("softw_stream")
       .outputMode("append").start()
     try {
@@ -970,13 +980,13 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streaming near-dup candidates: state TTL ages out cold band reps") {
+  test("streaming near-dup candidates: state TTL ages out cold band reps", Curation) {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, String)]
     val textA = "alpha beta gamma delta epsilon zeta eta theta"
     // 1 ms TTL + a real trigger interval (the production shape — a 0 ms
     // trigger would busy-loop the timeout-check batches)
-    val q = StreamingJobs.nearDupCandidates(in.toDF.toDF("doc_id", "text"),
+    val q = CurationStreams.nearDupCandidates(in.toDF.toDF("doc_id", "text"),
         stateTtl = Some(java.time.Duration.ofMillis(1)))
       .writeStream.format("memory").queryName("neardup_ttl_stream")
       .outputMode("append")
@@ -1104,11 +1114,11 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("threshold alarms: custom keyed state fires exactly once per key") {
+  test("threshold alarms: custom keyed state fires exactly once per key", Curation) {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, Long)] // (key, ts)
-    val q = StreamingJobs.thresholdAlarms(in.toDS(), threshold = 3)
+    val q = CurationStreams.thresholdAlarms(in.toDS(), threshold = 3)
       .writeStream.format("memory").queryName("alarms")
       .outputMode("append").start()
     try {
@@ -1127,11 +1137,11 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streaming HLL registers: update-mode max aggregation equals the batch sketch") {
+  test("streaming HLL registers: update-mode max aggregation equals the batch sketch", Curation) {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(String, String)] // (source, text)
-    val q = StreamingJobs.hllRegisterStream(in.toDF.toDF("source", "text"))
+    val q = CurationStreams.hllRegisterStream(in.toDF.toDF("source", "text"))
       .writeStream.format("memory").queryName("hll_stream")
       .outputMode("complete").start()
     val batches = Seq(
@@ -1149,11 +1159,11 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streaming CMS counters: update-mode sum aggregation equals the batch sketch") {
+  test("streaming CMS counters: update-mode sum aggregation equals the batch sketch", Curation) {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[String]
-    val q = StreamingJobs.cmsCounterStream(in.toDF.toDF("text"), d = 2, w = 16)
+    val q = CurationStreams.cmsCounterStream(in.toDF.toDF("text"), d = 2, w = 16)
       .writeStream.format("memory").queryName("cms_stream")
       .outputMode("complete").start()
     val batches = Seq(
@@ -1212,4 +1222,8 @@ class StreamingSpec extends SparkSpec {
       assert(batch == got)
     } finally q.stop()
   }
+}
+
+object StreamingSpec {
+  object Curation extends org.scalatest.Tag("graft.CurationStream")
 }
