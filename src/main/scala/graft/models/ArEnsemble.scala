@@ -1,6 +1,7 @@
 package graft.models
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.math.{BigDecimal => JBigDecimal}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -134,21 +135,17 @@ object ArEnsemble {
   private val decSumT = DecimalType(25, 4)
   private val decProdT = DecimalType(38, 8)
 
-  /** The nine exact moments of the (y2, y1, y) rows, or of those among
-    * them where `rows` holds. */
-  private def momentAggs(v: Column, y1: Column, y2: Column, rows: Option[Column] = None) = {
-    def over(c: Column) = rows.fold(c)(when(_, c))
-    Seq(
-      count(over(lit(1))).as("n3"),
-      sum(over(dec15(v))).cast(decSumT).as("sy"),
-      sum(over(dec15(y1))).cast(decSumT).as("s1"),
-      sum(over(dec15(y2))).cast(decSumT).as("s2"),
-      sum(over(dec15(y1) * dec15(y1))).cast(decProdT).as("s11"),
-      sum(over(dec15(y2) * dec15(y2))).cast(decProdT).as("s22"),
-      sum(over(dec15(y1) * dec15(y2))).cast(decProdT).as("s12"),
-      sum(over(dec15(y1) * dec15(v))).cast(decProdT).as("s1y"),
-      sum(over(dec15(y2) * dec15(v))).cast(decProdT).as("s2y"))
-  }
+  /** The nine exact moments of the (y2, y1, y) rows. */
+  private def momentAggs(v: Column, y1: Column, y2: Column) = Seq(
+    count(lit(1)).as("n3"),
+    sum(dec15(v)).cast(decSumT).as("sy"),
+    sum(dec15(y1)).cast(decSumT).as("s1"),
+    sum(dec15(y2)).cast(decSumT).as("s2"),
+    sum(dec15(y1) * dec15(y1)).cast(decProdT).as("s11"),
+    sum(dec15(y2) * dec15(y2)).cast(decProdT).as("s22"),
+    sum(dec15(y1) * dec15(y2)).cast(decProdT).as("s12"),
+    sum(dec15(y1) * dec15(v)).cast(decProdT).as("s1y"),
+    sum(dec15(y2) * dec15(v)).cast(decProdT).as("s2y"))
 
   /** M1 incremental state — the closed-form analog of the reference's
     * per-model ArimaModelWrapper bookkeeping (reference
@@ -157,9 +154,9 @@ object ArEnsemble {
     * EXACT decimal moments of the strided AR(2) design, the last two grid
     * values (the lag context), and counters. The OLS moments are
     * ADDITIVE, so [[updateState]] aggregates only the stride-aligned NEW
-    * observations — O(1) state per model, never a refit over history. On
-    * a cluster the state is `models` tiny rows while each update's moment
-    * deltas are a distributed aggregation over the new batch only.
+    * observations — O(1) state per model, never a refit over history:
+    * the state is `models` tiny rows, and an update folds only the new
+    * batch into them.
     *
     * The stride grid is anchored at the END of the initial series
     * (reference `(count-1) - arange(0, count, stride)`); updates consume
@@ -215,64 +212,72 @@ object ArEnsemble {
     * grid extend the moments additively; the rest only advance the global
     * position counter (they may become grid points of later batches).
     *
-    * One pass: each new observation (k-th by ts) meets every state row,
-    * and sits at global position n_tot + k − 1, on model m's grid when
-    * that is ≡ anchor (mod m). Per model, the aligned points in order take
-    * their lags from the state's last two grid values (yl1, yl2) and then
-    * from each other; one aggregate sums the moments of the complete
-    * (y2, y1, y) rows and picks the new last two values and last ts.
-    *
-    * NOTE for callers: `state` is referenced twice below (the alignment
-    * and the final join) — pass it materialized (a parquet read, or
-    * `.persist()` at the call site) or its upstream plan re-executes.
-    * Persisting HERE would leak one cache entry per optimize-loop tick, so
-    * ownership stays with the caller. */
+    * The update is a driver fold over the `models` state rows
+    * ([[updateRows]]): both inputs are collected, so `newObs` must be
+    * tick-sized (the points since the last update, not a history). The
+    * state is a few rows and a tick brings tens of points: a distributed
+    * plan would spend most of a second on joins, windows and broadcasts
+    * for microseconds of arithmetic. The result is a local relation, so
+    * projections over it (the forecast) run no Spark job. */
   def updateState(state: DataFrame, newObs: DataFrame, models: Int = 20): DataFrame = {
-    val nNew = newObs.agg(count(lit(1)).as("n_new"), max(col("ts")).as("mx_new"))
-    val grid = state.filter(col("model_id") <= models).select(col("model_id"),
-      col("n_tot"), col("anchor"), col("yl1").as("c1"), col("yl2").as("c2"))
-    val wS = Window.partitionBy(col("model_id")).orderBy(col("k"))
-    val aligned = newObs
-      .withColumn("k", row_number().over(Window.partitionBy(col("ts") % 1).orderBy("ts")))
-      .crossJoin(broadcast(grid))
-      .filter((col("n_tot") + col("k") - 1 - col("anchor")) % col("model_id") === 0)
-      .withColumn("sk", row_number().over(wS))
-      .withColumn("y1", when(col("sk") === 1, col("c1"))
-        .otherwise(lag(col("value"), 1).over(wS)))
-      .withColumn("y2", when(col("sk") === 1, col("c2")).when(col("sk") === 2, col("c1"))
-        .otherwise(lag(col("value"), 2).over(wS)))
-    // complete (y2,y1,y) rows only — same rule as fitState's
-    // y2.isNotNull filter: a model fitted from <2 grid points carries a
-    // null lag context, and its first new rows must not count into n3
-    // while contributing nothing to the (null-skipping) moment sums
-    val moments = momentAggs(col("value"), col("y1"), col("y2"), Some(col("y2").isNotNull))
-    val deltas = aligned.groupBy(col("model_id"))
-      .agg(moments.head, moments.tail ++ Seq(
-        // the latest grid values from the unfiltered tail: an incomplete
-        // first row still advances the grid
-        max_by(col("value"), col("sk")).as("nyl1"),
-        max_by(col("y1"), col("sk")).as("nyl2"),
-        max(col("ts")).as("d_last_ts")): _*)
-      .select(col("model_id") +: col("nyl1") +: col("nyl2") +: col("d_last_ts") +:
-        Seq("n3", "sy", "s1", "s2", "s11", "s22", "s12", "s1y", "s2y")
-          .map(c => col(c).as(s"d_$c")): _*)
-    def addDec(name: String, t: DecimalType) =
-      (col(name) + coalesce(col(s"d_$name"), lit(0).cast(t))).cast(t).as(name)
-    // deltas has at most `models` rows: broadcast it, as the planner
-    // cannot bound it from statistics
-    state.join(broadcast(deltas), Seq("model_id"), "left")
-      .crossJoin(broadcast(nNew))
-      .select(col("model_id"),
-        (col("n3") + coalesce(col("d_n3"), lit(0L))).as("n3"),
-        addDec("sy", decSumT), addDec("s1", decSumT), addDec("s2", decSumT),
-        addDec("s11", decProdT), addDec("s22", decProdT), addDec("s12", decProdT),
-        addDec("s1y", decProdT), addDec("s2y", decProdT),
-        coalesce(col("nyl1"), col("yl1")).as("yl1"),
-        coalesce(col("nyl2"), col("yl2")).as("yl2"),
-        coalesce(col("d_last_ts"), col("last_ts")).as("last_ts"),
-        col("anchor"), (col("n_tot") + col("n_new")).as("n_tot"),
-        (col("n_upd") + coalesce(col("d_n3"), lit(0L))).as("n_upd"),
-        greatest(col("seen_ts"), coalesce(col("mx_new"), col("seen_ts"))).as("seen_ts"))
+    val obs = newObs.select(col("ts"), col("value").cast("double")).collect()
+      .map(r => (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getDouble(1)))).sortBy(_._1)
+    state.sparkSession.createDataFrame(
+      java.util.Arrays.asList(updateRows(state.collect().toSeq, obs.toSeq, models): _*), state.schema)
+  }
+
+  /** The update fold, bit-equal to Spark's decimal rules: a value enters
+    * as the DOUBLE → DECIMAL(15,4) cast (its `Double.toString` digits,
+    * HALF_UP, raising on overflow as under ANSI), and `state + delta` on
+    * a DECIMAL(38,8) moment is typed DECIMAL(38,7) by Spark's
+    * precision-loss rule, so every update rounds those sums HALF_UP to 7
+    * places before they are stored at scale 8 again. `obs` is ts-sorted;
+    * the k-th point sits at global position n_tot + k − 1, on model m's
+    * grid when that is ≡ anchor (mod m). Per model, the aligned points
+    * take their lags from the state's last two grid values and then from
+    * each other; only complete (y2, y1, y) rows count into n3 and the
+    * (null-skipping) sums. Rows with model_id > `models` only advance
+    * n_tot and seen_ts. */
+  def updateRows(state: Seq[Row], obs: Seq[(Long, Option[Double])], models: Int): Seq[Row] =
+    state.map { r =>
+      val out = r.toSeq.toArray
+      def set(c: String, v: Any): Unit = out(r.fieldIndex(c)) = v
+      def opt(c: String) = Option(r.getAs[java.lang.Double](c)).map(_.doubleValue)
+      val m = r.getAs[Int]("model_id")
+      val nTot = r.getAs[Long]("n_tot")
+      val grid = if (m > models) Seq.empty else obs.zipWithIndex.collect {
+        case (p, k) if (nTot + k - r.getAs[Number]("anchor").longValue) % m == 0 => p }
+      val ys = Seq(opt("yl2"), opt("yl1")) ++ grid.map(_._2)
+      val dy = ys.map(_.map(toDec15))
+      def mul(a: Option[JBigDecimal], b: Option[JBigDecimal]) = for (x <- a; y <- b) yield x.multiply(y)
+      val terms = grid.indices.map(i => (dy(i), dy(i + 1), dy(i + 2))).filter(_._1.isDefined)
+        .map { case (y2, y1, y) =>
+          Seq(y, y1, y2, mul(y1, y1), mul(y2, y2), mul(y1, y2), mul(y1, y), mul(y2, y)) }
+      MomentCols.zipWithIndex.foreach { case (c, j) =>
+        val s = terms.flatMap(_(j)).foldLeft(r.getAs[JBigDecimal](c))(_ add _)
+        // sy, s1, s2 are (25,4) sums, which add exactly
+        set(c, if (j < 3) s else s.setScale(7, HalfUp).setScale(8))
+      }
+      set("n3", r.getAs[Long]("n3") + terms.size)
+      set("n_upd", r.getAs[Long]("n_upd") + terms.size)
+      // the last aligned value and its lag; a null keeps the stored one
+      grid.lastOption.foreach { case (ts, _) =>
+        set("yl1", ys.last.orElse(opt("yl1")).getOrElse(null))
+        set("yl2", ys(ys.size - 2).orElse(opt("yl2")).getOrElse(null))
+        set("last_ts", ts)
+      }
+      set("n_tot", nTot + obs.size)
+      obs.lastOption.foreach(p => set("seen_ts", math.max(r.getAs[Long]("seen_ts"), p._1)))
+      Row.fromSeq(out.toSeq)
+    }
+
+  private val MomentCols = Seq("sy", "s1", "s2", "s11", "s22", "s12", "s1y", "s2y")
+  private val HalfUp = java.math.RoundingMode.HALF_UP
+
+  private def toDec15(v: Double): JBigDecimal = {
+    val d = new JBigDecimal(java.lang.Double.toString(v)).setScale(4, HalfUp)
+    if (d.precision > 15) throw new ArithmeticException(s"$v overflows DECIMAL(15,4)")
+    d
   }
 
   /** Closed-form refit + recursive forecast from the (decimal) state: the
@@ -281,8 +286,7 @@ object ArEnsemble {
   def forecastFromState(state: DataFrame, horizon: Int = 20): DataFrame = {
     val df = state.select(Seq(col("model_id"), col("n3"), col("n_upd"),
       col("last_ts"), col("yl1"), col("yl2")) ++
-      Seq("sy", "s1", "s2", "s11", "s22", "s12", "s1y", "s2y")
-        .map(c => col(c).cast("double").as(c)): _*)
+      MomentCols.map(c => col(c).cast("double").as(c)): _*)
       .withColumn("det", expr(detSql))
       // a singular design (too few points, or a perfectly collinear
       // series) yields null forecasts instead of an ANSI division error;
@@ -312,9 +316,14 @@ object ArEnsemble {
       .select(col("model_id"), (col("pos") + 1).as("step"), col("col").as("f"))
     val members = long.groupBy(col("step")).agg(array((1 to models).map(k =>
       max(when(col("model_id") === k, col("f")))): _*).as("xs"))
-    val blend = aggregate(col("xs"), lit(null).cast("double"), (acc, x) =>
-      when(x.isNull, acc).when(acc.isNull, x)
-        .otherwise(acc * (lit(2e0) / lit(3e0)) + x * (lit(1e0) / lit(3e0))))
-    members.select(col("step"), round(blend + lit(1e-9), 4).as("blend"))
+    members.select(col("step"), ewmBlend(col("xs")).as("blend"))
   }
+
+  /** The blend of one model-ordered member array (null members skipped),
+    * rounded to 4 places: [[blendForecast]]'s fold, and the optimize
+    * loop's over its one-row frame of next-step forecasts. */
+  def ewmBlend(members: Column): Column =
+    round(aggregate(members, lit(null).cast("double"), (acc, x) =>
+      when(x.isNull, acc).when(acc.isNull, x)
+        .otherwise(acc * (lit(2e0) / lit(3e0)) + x * (lit(1e0) / lit(3e0)))) + lit(1e-9), 4)
 }

@@ -379,7 +379,7 @@ object VectorOps {
     // Deliberately NOT persisted: the explode is a cheap projection of
     // one scan (A/B-benched within noise of the cached form), while a
     // persist here would pin corpus×dim rows per call for the session
-    // lifetime (see the updateState caller-ownership note).
+    // lifetime.
     val ex = emb.select(col("vec_id"), quant.as("q"))
       .select(col("vec_id"), posexplode(col("q")).as(Seq("i", "x")))
     val cells = signProjections(emb, bits)

@@ -76,17 +76,15 @@ object MlQueries extends QueryModule {
     // incremental == from-scratch.
     "m1_update_forecast" -> ((s, d) => {
       val wOrd = Window.partitionBy(col("ts") % 1).orderBy("ts")
-      // both the init and tail segments (and the tail twice, via
-      // updateState's count + alignment legs) read this subplan: cache it
+      // both the init and tail segments read this subplan: cache it
       val posed = graft.CacheScope.persist(clickDf(s, d)
         .withColumn("pos", row_number().over(wOrd) - 1)
         .withColumn("n", count(lit(1)).over(Window.partitionBy(col("ts") % 1)))
         .withColumn("cut", col("n") - 1 - expr("(n - 1) div 6")))
       val init = posed.filter(col("pos") <= col("cut")).select("ts", "value")
       val tail = posed.filter(col("pos") > col("cut")).select("ts", "value")
-      // updateState reads its state twice: materialize the O(models)-row fit
-      val st = graft.CacheScope.persist(ArEnsemble.fitState(init, MODELS))
-      ArEnsemble.forecastFromState(ArEnsemble.updateState(st, tail, MODELS), HOR_UPD)
+      ArEnsemble.forecastFromState(
+        ArEnsemble.updateState(ArEnsemble.fitState(init, MODELS), tail, MODELS), HOR_UPD)
     }),
 
     // A17+A10: the ensemble frame blended across the model axis with the

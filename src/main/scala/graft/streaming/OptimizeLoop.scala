@@ -135,18 +135,20 @@ object OptimizeLoop {
 
   /** M1 forecaster tick (reference analytics/app/workload/models.py:166-183
     * `predict()`: update each model with the new observations, persist the
-    * updated state, forecast): maintains the incremental [[ArEnsemble]]
-    * state under `stateDir` — first tick fits, later ticks `update()` with
-    * only `newObs` — and returns the per-model forecast frame. The state
-    * swap is write-next → delete → rename (a parquet table can't be
-    * overwritten while being read).
-    *
-    * The state is `models` tiny rows and a tick brings few observations,
-    * so the update runs in one partition (its windows and joins then need
-    * no shuffle) and is collected once: the write and the forecast both
-    * read the collected rows, so the stored state is read once. */
+    * updated state, forecast): [[advance]] with the state read from
+    * `stateDir`, then the per-model forecast frame. */
   def forecastTick(spark: SparkSession, stateDir: String, newObs: DataFrame,
-                   models: Int = 20, horizon: Int = 20): DataFrame = {
+                   models: Int = 20, horizon: Int = 20): DataFrame =
+    ArEnsemble.forecastFromState(advance(spark, stateDir, None, newObs, models), horizon)
+
+  /** One step of the incremental [[ArEnsemble]] state under `stateDir`:
+    * the first step fits, later ones `update()` `resident` — the state the
+    * caller holds from its last step — or, when it holds none, the stored
+    * state. The new state is durably swapped in (write-next → delete →
+    * rename: a parquet table can't be overwritten while being read) and
+    * returned as a local relation, so a forecast over it runs no job. */
+  private def advance(spark: SparkSession, stateDir: String, resident: Option[DataFrame],
+                      newObs: DataFrame, models: Int): DataFrame = {
     val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
     val cur = new Path(s"$stateDir/m1_state")
     val nxt = new Path(s"$stateDir/m1_state_next")
@@ -155,26 +157,35 @@ object OptimizeLoop {
     // silently refitting from one batch and discarding all prior moments
     if (!fs.exists(cur) && fs.exists(nxt) &&
         require2(fs.rename(nxt, cur), s"promote $nxt")) ()
-    val next =
-      if (fs.exists(cur))
-        ArEnsemble.updateState(spark.read.parquet(cur.toString).coalesce(1),
-          newObs.coalesce(1), models)
-      else ArEnsemble.fitState(newObs, models)
-    val rows = next.collect()
-    val st = spark.createDataFrame(java.util.Arrays.asList(rows: _*), next.schema)
-      .coalesce(1)
+    val next = resident.orElse(Some(cur).filter(fs.exists).map(p => spark.read.parquet(p.toString)))
+      .map(ArEnsemble.updateState(_, newObs, models))
+      .getOrElse {
+        val fit = ArEnsemble.fitState(newObs, models)
+        spark.createDataFrame(java.util.Arrays.asList(fit.collect(): _*), fit.schema)
+      }
     // an empty state must NEVER be written: a fitState over zero
     // observations would persist an empty frame, and every later
     // updateState over it stays empty — the store would be permanently
     // bricked while the cursor advances past real data. A stored state is
     // therefore never empty, and an empty first tick simply waits for
     // observations.
-    if (rows.nonEmpty) {
-      st.write.mode("overwrite").parquet(nxt.toString)
+    if (!next.isEmpty) {
+      next.coalesce(1).write.mode("overwrite").parquet(nxt.toString)
       fs.delete(cur, true)
       require2(fs.rename(nxt, cur), s"swap $nxt -> $cur")
     }
-    ArEnsemble.forecastFromState(st, horizon)
+    next
+  }
+
+  /** The blended next-step forecast of the per-model (model_id, …, f1)
+    * rows: the EWM fold over the model-ordered members, on a one-row
+    * local frame (no job); NaN where every member is null. */
+  private def blendNext(spark: SparkSession, f1: Seq[Row], models: Int): Double = {
+    import spark.implicits._
+    val byModel = f1.map(r => r.getAs[Int]("model_id") -> r.getAs[java.lang.Double]("f1")).toMap
+    val members = (1 to models).map(k => byModel.get(k).flatMap(Option(_)).map(_.doubleValue))
+    val b = Seq(Tuple1(members)).toDF("xs").select(ArEnsemble.ewmBlend(col("xs"))).head
+    if (b.isNullAt(0)) Double.NaN else b.getDouble(0)
   }
 
   /** Starts `body` on a thread of its own and returns a function that
@@ -236,6 +247,10 @@ object OptimizeLoop {
     // moments (which would silently double-count every sum)
     var lastSeenTs = forecastDir.map(fd => seedCursor(metrics.sparkSession, fd))
       .getOrElse(Long.MinValue)
+    // the state of the last successful swap, held like the reference's
+    // in-process models: only the first tick after a (re)start reads the
+    // durable state
+    var resident: Option[DataFrame] = None
     metrics.writeStream.trigger(trigger).foreachBatch {
       (batch: DataFrame, id: Long) =>
         // keyed by the stream's checkpointed id and the batch id: a batch
@@ -254,13 +269,14 @@ object OptimizeLoop {
           val fNext: Option[Double] = forecastDir.map { fd =>
             val newThr = hist.filter(col("sid") === "throughput" &&
               col("ts") > lastSeenTs).select("ts", "value")
+            val st = advance(spark, fd, resident, newThr, forecastModels)
+            val f1 = ArEnsemble.forecastFromState(st, 1).collect().toSeq
+            // an empty state is not stored: the next tick fits afresh
+            if (f1.nonEmpty) resident = Some(st)
             // the stored value is the BLENDED next-step forecast (EWM
             // span-5 over the ensemble — A10/A17, the value the reference's
             // prediction row records), not a plain model mean
-            val wide = forecastTick(spark, fd, newThr, forecastModels, horizon = 1)
-            val bRow = ArEnsemble.blendForecast(wide, forecastModels, 1).head(1)
-            if (bRow.isEmpty || bRow.head.isNullAt(1)) Double.NaN
-            else bRow.head.getDouble(1)
+            blendNext(spark, f1, forecastModels)
           }
           val stats = evaluation()
           stats.throughputMaxTs.foreach(mx => lastSeenTs = math.max(lastSeenTs, mx))

@@ -144,6 +144,56 @@ class MlSpec extends SparkSpec {
     assert(nTot2 == 100, s"state recovered across the crash window, got $nTot2")
   }
 
+  test("M1 update: three chained updates give the pinned decimal state rows") {
+    // 8 fitted points over 9 models, then updates over 8 models: model 9
+    // is a state row outside the update, strides 8 and 9 start from one
+    // grid point (a null lag context) and 4..7 from two. The first batch
+    // lands on no grid point of strides 7 and 8 and ends on a null value,
+    // the second is empty, the third carries a null and 5-decimal values
+    // (one an exact half at the 5th) so dec15 rounds, and its products'
+    // 8th decimals meet the (38,7) rounding of `state + delta`
+    val t0 = 1704067200L
+    val rnd = new Random(41)
+    val vals = (0 until 36).map { i =>
+      val v = math.rint((100 + 12 * math.sin(i / 3.0) + rnd.nextGaussian()) * 1e5) / 1e5
+      (t0 + i * 60L, java.lang.Double.valueOf(if (i == 20) 98.76545 else v))
+    }
+    def df(s: Seq[(Long, java.lang.Double)]) = s.toDF("ts", "value")
+    val nulled = (i: Int) => (vals(i)._1, null.asInstanceOf[java.lang.Double])
+    val fit = ArEnsemble.fitState(df(vals.take(8)), models = 9)
+    val st1 = ArEnsemble.updateState(fit, df(Seq(vals(8), vals(9), nulled(10))), 8)
+    val st2 = ArEnsemble.updateState(st1, df(Nil), 8)
+    val st3 = ArEnsemble.updateState(st2,
+      df(vals.slice(11, 36).zipWithIndex.map { case (p, i) => if (i == 6) nulled(11 + i) else p }), 8)
+    def rows(st: org.apache.spark.sql.DataFrame) =
+      st.orderBy("model_id").collect().toSeq.map(_.mkString(","))
+    // the fit leaves 8th decimals that the first update rounds away
+    assert(fit.collect().exists(r => Seq("s11", "s12", "s1y").exists(c =>
+      r.getAs[java.math.BigDecimal](c).unscaledValue.mod(java.math.BigInteger.TEN).signum != 0)))
+    // recorded from the distributed update plan this fold replaced
+    assert(rows(st1) == Seq(
+      "1,9,868.8826,971.9775,970.4487,105095.23025540,104785.25779980,104906.47401300,94533.75591080,93993.84130090,108.16843,102.14208,1704067800,7,11,3,1704067800",
+      "2,3,323.3981,331.3978,326.3243,36620.42413960,35548.57978700,36043.23443030,35736.72410320,35123.62204030,102.14208,108.16843,1704067740,7,11,1,1704067800",
+      "3,2,108.1684,220.5403,215.4668,24327.84666820,23256.00231560,23740.05842130,12155.08862800,11151.61038120,108.16843,108.16843,1704067800,7,11,1,1704067800",
+      "4,0,0.0000,0.0000,0.0000,0E-8,0E-8,0E-8,0E-8,0E-8,108.16843,110.14178,1704067620,7,11,0,1704067800",
+      "5,0,0.0000,0.0000,0.0000,0E-8,0E-8,0E-8,0E-8,0E-8,108.16843,107.24937,1704067620,7,11,0,1704067800",
+      "6,0,0.0000,0.0000,0.0000,0E-8,0E-8,0E-8,0E-8,0E-8,108.16843,103.09494,1704067620,7,11,0,1704067800",
+      "7,0,0.0000,0.0000,0.0000,0E-8,0E-8,0E-8,0E-8,0E-8,108.16843,100.61326,1704067620,7,11,0,1704067800",
+      "8,0,0.0000,0.0000,0.0000,0E-8,0E-8,0E-8,0E-8,0E-8,108.16843,null,1704067620,7,11,0,1704067800",
+      "9,0,0.0000,0.0000,0.0000,0E-8,0E-8,0E-8,0E-8,0E-8,108.16843,null,1704067620,7,11,0,1704067800"))
+    assert(rows(st2) == rows(st1))
+    assert(rows(st3) == Seq(
+      "1,33,3114.5717,3237.2753,3346.6562,330038.86181750,341793.84465920,331621.69835840,308535.18076330,318589.61122830,91.11023,88.68312,1704069300,7,36,27,1704069300",
+      "2,15,1392.0088,1417.8341,1533.6377,144791.43794650,157800.25579770,147150.49750340,133069.05862630,143980.24154930,91.11023,87.29251,1704069300,7,36,13,1704069300",
+      "3,10,892.0303,1023.8875,1034.7154,105603.94634480,107719.30546180,106219.77945390,91116.93048970,91090.94652970,88.68312,92.26696,1704069240,7,36,9,1704069300",
+      "4,7,682.7841,699.8423,717.7171,70425.29576960,74043.31258790,71879.64687830,68372.24942250,69625.83587570,91.11023,92.26696,1704069300,7,36,7,1704069300",
+      "5,4,289.2606,304.3259,415.9926,31057.39900070,43513.72444090,33031.88816700,19157.49300960,29425.85405640,88.68579,105.76362,1704069120,7,36,4,1704069300",
+      "6,4,393.7251,409.6265,400.3354,42264.88098280,40262.82639280,40932.19886900,40150.10754980,39236.85821830,92.26696,112.38603,1704069060,7,36,4,1704069300",
+      "7,4,388.3991,405.4573,404.7094,41324.30232590,41173.24559730,40868.31972380,39220.17924840,39284.49087270,91.11023,101.36118,1704069300,7,36,4,1704069300",
+      "8,2,203.5662,199.8691,196.7383,20232.13910670,19545.02994460,19438.22338520,20127.00230050,20211.13534860,92.26696,111.29919,1704069060,7,36,2,1704069300",
+      "9,0,0.0000,0.0000,0.0000,0E-8,0E-8,0E-8,0E-8,0E-8,108.16843,null,1704067620,7,36,0,1704069300"))
+  }
+
   test("M1 chunked (bucket-carry) ranking == single-partition ranking") {
     // a long series across many ts-buckets, deliberately NOT bucket-aligned
     val vals = (0 until 1200).map(i => (7L + i * 60L,

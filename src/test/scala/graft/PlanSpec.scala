@@ -24,7 +24,6 @@ class PlanSpec extends SparkSpec {
     "ann_kmeans_recall" -> "contains the same brute-force exact baseline as ann_cosine_topk (fixed query set)",
     "ann_graph_recall" -> "contains the same brute-force exact baseline as ann_cosine_topk (fixed query set)",
     "m2_capacity" -> "broadcasts a 1-row stats aggregate x 3 alphas back over the training rows",
-    "m1_update_forecast" -> "broadcasts a 1-row (n_tot, anchor) aggregate over the new observations",
     "j6_cluster_validity" -> "pairwise validity over the <= 23-row candidate set, both sides bounded",
     "j8_candidate_response_join" -> "non-equi ts join against the <= 23-row candidate set (broadcast side bounded)",
     "m10_backpressure_rule" -> "broadcasts 1-row slope-fit aggregates over the series",
